@@ -395,7 +395,7 @@ def scaling_measurement() -> dict:
     # full-size datagen inside its own budget and window), then exercise
     # the whole leg path once at the wide width so pair 1 starts from the
     # same page-cache/JIT state as pair 2+.
-    transcripts_path(turns)
+    transcripts_path(SCALING_TURNS)
     run_leg(SCALING_4N, turns=300_000, reps=1)
 
     # Self-bounding: the first pair always runs (a valid ratio needs one

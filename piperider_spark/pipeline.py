@@ -13,8 +13,12 @@ Scale design (SURVEY.md §3.1 "Spark rebuild lifecycle"):
   ``bucket = pmod(xxhash64(conv_id), n_buckets)`` — a salted, uniform
   re-keying of conv space (all turns of a conv stay together, buckets are
   balanced in expectation) — plus AQE skew handling for the residual tail.
+* One pass per wave: the fused plan runs once, uncached, into the
+  decisions write; metrics/ and conversations/ are aggregated from a narrow
+  parquet read of the bucket partitions the wave just wrote.
 * Lineage/resume: each completed bucket writes one lineage row (run_id,
-  bucket, counts, wall ms). A restarted run anti-joins finished buckets and
+  bucket, modes, wave wall ms), one file per wave from a driver-side Arrow
+  table (no Python worker). A restarted run anti-joins finished buckets and
   only processes the remainder — the Iceberg-snapshot checkpoint model of
   SURVEY.md §2.9 expressed over parquet in this sandbox.
 * At 10^12 turns: n_buckets scales to ~10^4; each wave is an independent
@@ -31,11 +35,19 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from piperider_spark.rules.heuristics import apply_rules
 from piperider_spark.rules.spec import DEFAULT_SPEC, RuleSpec
 
 TRANSCRIPT_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
+
+LINEAGE_SCHEMA = (
+    "run_id string, bucket int, elapsed_ms long, conv_rollup boolean, "
+    "dedup_mode string, dsir_mode string, substr_mode string, "
+    "bpe_mode string, clf_mode string, langid_mode string, "
+    "spec_sig string, rollup_frac double, ts double"
+)
 
 
 def build_decisions(df: DataFrame, spec: RuleSpec = DEFAULT_SPEC) -> DataFrame:
@@ -112,17 +124,18 @@ def conversation_rollup(
     (including n_roles — collect_set over a bounded enum, NOT a distinct
     aggregate), so the turn-grain rows are collapsed to conversation-grain
     partial rows BEFORE the aggregate's exchange; the only data this
-    groupBy shuffles is ~one row per conversation per task. (AQE's
-    post-window partition coalescing means Spark still plans that exchange
-    rather than reusing the window's — measured; the exchange is narrow.)
+    groupBy shuffles is ~one row per conversation per task. run_pipeline
+    feeds it a read-back of the written decisions, so there is no upstream
+    exchange to reuse; over ``build_decisions`` directly, AQE's post-window
+    coalescing makes Spark plan its own (narrow) exchange as well.
     Plan-asserted in test_pipeline: exchanges on conv_id only, never on
     (conv_id, role)."""
     agg = decided.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.sum(F.col("keep").cast("long")).alias("n_kept"),
         # NOT count_distinct: a distinct aggregate re-exchanges on
-        # (conv_id, role), breaking the window-exchange reuse. collect_set
-        # partial-aggregates map-side and roles are a bounded enum.
+        # (conv_id, role). collect_set partial-aggregates map-side and
+        # roles are a bounded enum.
         F.size(F.collect_set("role")).alias("n_roles"),
         F.min("ts").alias("ts_min"),
         F.max("ts").alias("ts_max"),
@@ -178,9 +191,11 @@ def _artifact_key(path: str) -> str:
     dup_convs sidecar — the documented "resuming against a different
     snapshot reprocesses" contract, which bare path identity cannot keep
     (review finding: epoch workflows that overwrite latest.bloom reused
-    stale sidecars)."""
+    stale sidecars). A missing path is a ValueError naming it."""
     import hashlib
 
+    if not os.path.exists(path):
+        raise ValueError(f"artifact path does not exist: {path!r}")
     h = hashlib.md5()
     if os.path.isdir(path):
         for root, dirs, files in sorted(os.walk(path)):
@@ -925,10 +940,11 @@ def run_pipeline(
             for _b in wave:
                 _sh.rmtree(os.path.join(_base, f"bucket={_b}"), ignore_errors=True)
 
-        # persist: decisions write AND the metrics groupBy both consume
-        # `decided`; without it the fused signals/scrub UDF stage and the
-        # lag-window shuffle would execute twice per wave
-        decided = build_decisions(part, spec).persist()
+        # No cache: the decisions write is the ONLY consumer of `decided`, so
+        # the fused signals/scrub UDF and the lag-window shuffle run once per
+        # row, and AQE may coalesce the post-window stage (it cannot inside
+        # a cached plan).
+        decided = build_decisions(part, spec)
 
         out_cols = [
             "bucket", "conv_id", "turn_idx", "role", "ts",
@@ -944,9 +960,9 @@ def run_pipeline(
             out_cols.append("clf_score")
         if langid_model is not None:
             out_cols.extend(["ft_lang", "ft_lang_prob"])
+        out = decided.select(*out_cols)
         (
-            decided.select(*out_cols)
-            .repartition("bucket")
+            out.repartition("bucket")
             .sortWithinPartitions("conv_id", "turn_idx")  # stable north-rule ordering
             .write.mode("overwrite")  # dynamic: replaces only this wave's buckets
             .option("partitionOverwriteMode", "dynamic")
@@ -954,69 +970,92 @@ def run_pipeline(
             .parquet(decisions_path)
         )
 
-        # per-bucket metrics: PipeRider's run.json per partition (SURVEY §7.1
-        # item 5) — one groupBy(bucket) over the wave (partial agg map-side)
-        reason_aggs = [
-            F.sum(F.col(f"r_{name}").cast("long")).alias(f"n_{name}")
-            for name in spec.reason_order
+        # Read back ONLY this wave's partition dirs (listing all of
+        # decisions/ would cost a job per wave at 10^4 buckets), with the
+        # written plan's schema (inference would cost another job). A bucket
+        # with zero rows has no dir, so an empty wave writes no metrics or
+        # conversations rows.
+        written = [
+            d
+            for d in (os.path.join(decisions_path, f"bucket={b}") for b in wave)
+            if os.path.isdir(d)
         ]
-        (
-            decided.groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_turns"),
-                F.sum(F.col("keep").cast("long")).alias("n_kept"),
-                F.count_distinct("conv_id").alias("n_convs"),
-                F.min("ts").alias("ts_min"),
-                F.max("ts").alias("ts_max"),
-                *reason_aggs,
+        if written:
+            narrow = ("bucket", "conv_id", "role", "ts", "keep", "reasons")
+            read_back = (
+                spark.read.schema(StructType([out.schema[c] for c in narrow]))
+                .option("basePath", decisions_path)
+                .parquet(*written)
             )
-            .withColumn("run_id", F.lit(run_id))
-            .repartition("bucket")
-            .write.mode("overwrite")  # dynamic: idempotent under crash-resume
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(metrics_path)
-        )
-        if conv_rollup:
-            # bucket is a pure function of conv_id — recompute it on the
-            # conversation-grain rows (no join back to the turn-grain data)
+            # per-bucket metrics: PipeRider's run.json per partition (SURVEY
+            # §7.1 item 5) — one groupBy(bucket) (partial agg map-side).
+            # `reasons` is built from exactly the coalesced r_* flags
+            # (rules/heuristics.apply_rules), so counting names is exact.
+            reason_aggs = [
+                F.sum(F.array_contains("reasons", name).cast("long")).alias(
+                    f"n_{name}"
+                )
+                for name in spec.reason_order
+            ]
             (
-                conversation_rollup(decided, conv_min_keep_frac)
-                .withColumn("bucket", _bucket_col(n_buckets))
+                read_back.groupBy("bucket")
+                .agg(
+                    F.count(F.lit(1)).alias("n_turns"),
+                    F.sum(F.col("keep").cast("long")).alias("n_kept"),
+                    F.count_distinct("conv_id").alias("n_convs"),
+                    F.min("ts").alias("ts_min"),
+                    F.max("ts").alias("ts_max"),
+                    *reason_aggs,
+                )
+                .withColumn("run_id", F.lit(run_id))
                 .repartition("bucket")
-                .write.mode("overwrite")
+                .write.mode("overwrite")  # dynamic: idempotent under crash-resume
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
-                .parquet(os.path.join(output_dir, "conversations"))
+                .parquet(metrics_path)
             )
-        decided.unpersist()
+            if conv_rollup:
+                # bucket is a pure function of conv_id — recompute it on the
+                # conversation-grain rows (no join back to the turn-grain data)
+                (
+                    conversation_rollup(read_back, conv_min_keep_frac)
+                    .withColumn("bucket", _bucket_col(n_buckets))
+                    .repartition("bucket")
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("bucket")
+                    .parquet(os.path.join(output_dir, "conversations"))
+                )
+
+        # Lineage from a driver-side Arrow table: a LocalTableScan, so no
+        # Python worker starts to store a handful of rows; one file per wave.
+        import pyarrow as pa
 
         elapsed = int((time.time() - t0) * 1000)
-        lineage_rows = spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    b,
-                    elapsed,
-                    conv_rollup,
-                    dedup_mode,
-                    dsir_mode,
-                    substr_mode,
-                    bpe_mode,
-                    clf_mode,
-                    langid_mode,
-                    spec_sig,
-                    float(conv_min_keep_frac),
-                    time.time(),
-                )
-                for b in wave
-            ],
-            "run_id string, bucket int, elapsed_ms long, conv_rollup boolean, "
-            "dedup_mode string, dsir_mode string, substr_mode string, "
-            "bpe_mode string, clf_mode string, langid_mode string, "
-            "spec_sig string, rollup_frac double, ts double",
+        n = len(wave)
+        lineage_rows = pa.table(
+            {
+                "run_id": [run_id] * n,
+                "bucket": pa.array(wave, pa.int32()),
+                "elapsed_ms": pa.array([elapsed] * n, pa.int64()),
+                "conv_rollup": [bool(conv_rollup)] * n,
+                "dedup_mode": [dedup_mode] * n,
+                "dsir_mode": [dsir_mode] * n,
+                "substr_mode": [substr_mode] * n,
+                "bpe_mode": [bpe_mode] * n,
+                "clf_mode": [clf_mode] * n,
+                "langid_mode": [langid_mode] * n,
+                "spec_sig": [spec_sig] * n,
+                "rollup_frac": [float(conv_min_keep_frac)] * n,
+                "ts": [time.time()] * n,
+            }
         )
-        lineage_rows.write.mode("append").parquet(lineage_path)
+        (
+            spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA)
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(lineage_path)
+        )
         processed += len(wave)
 
     if bloom_out:
@@ -1072,12 +1111,6 @@ def run_pipeline(
         metrics_path=metrics_path,
         lineage_path=lineage_path,
     )
-
-
-def run_pipeline_single_pass(spark: SparkSession, input_path: str, spec: RuleSpec = DEFAULT_SPEC) -> DataFrame:
-    """One-job variant (no checkpointing) used by the bench harness: the
-    whole table through build_decisions, returning the decided DataFrame."""
-    return build_decisions(read_input(spark, input_path), spec)
 
 
 def main() -> None:  # pragma: no cover — spark-submit entry

@@ -82,9 +82,11 @@ TOXIC_REPLACEMENT = "<TOX>"
 # therefore translates every non-canonical member of each sre equivalence
 # group to its canonical char (group[0] — the ASCII letter for the latin
 # groups) AFTER lowering; translate is 1:1 per char so byte offsets stay
-# aligned. The table is read from the running stdlib's own sre data so it
-# cannot drift from the regex engine's behavior; the fallback list covers
-# the latin groups, the only ones reachable from an ASCII lexicon.
+# aligned. The table is read from the running stdlib's own sre data when
+# it exposes one (``_equivalences``, Python <= 3.10); otherwise the pinned
+# fallback below is used. It covers the latin groups, the only ones
+# reachable from an ASCII lexicon; tests pin it against the live tables.
+_SRE_EQUIV_FALLBACK = ((0x69, 0x131), (0x73, 0x17F), (0x6B, 0x212A), (0xE5, 0x212B))
 try:  # py3.11+: re._compiler; older: sre_compile
     from re import _compiler as _sre_compiler  # type: ignore[attr-defined]
 
@@ -95,7 +97,7 @@ except Exception:  # pragma: no cover
 
         _SRE_EQUIV = _sre_compiler._equivalences
     except Exception:
-        _SRE_EQUIV = ((0x69, 0x131), (0x73, 0x17F), (0x6B, 0x212A), (0xE5, 0x212B))
+        _SRE_EQUIV = _SRE_EQUIV_FALLBACK
 _CASE_EQUIV_TABLE = {
     cp: chr(group[0]) for group in _SRE_EQUIV for cp in group[1:]
 }

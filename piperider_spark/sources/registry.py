@@ -73,10 +73,13 @@ class DataSource:
         """(path, fmt) for a table file/dir — the ONE extension-priority
         walk both the typed and untyped readers share (review finding: two
         hand-maintained copies could resolve different files)."""
+        # a bare name that carries its own extension ("events.csv") reads
+        # in that extension's format, not the source default
+        bare_fmt = _EXTENSIONS.get(os.path.splitext(table)[1], self.fmt)
         candidates = [
             (os.path.join(self.path, f"{table}{ext}"), fmt)
             for ext, fmt in _EXTENSIONS.items()
-        ] + [(os.path.join(self.path, table), self.fmt)]
+        ] + [(os.path.join(self.path, table), bare_fmt)]
         for cand, fmt in candidates:
             if os.path.exists(cand):
                 return cand, fmt

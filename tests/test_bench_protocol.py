@@ -64,3 +64,40 @@ def test_bandwidth_probe_smoke():
     gbs = bandwidth_probe(mb=32, reps=2)
     assert gbs > 0.5
     assert time.time() - t0 < 15
+
+
+def test_scaling_measurement_protocol_end_to_end(monkeypatch):
+    """The whole protocol body, with every leg, probe and input stubbed:
+    a NameError or a key mix-up anywhere in it fails here instead of
+    shipping as a ``{"error": ...}`` scaling record."""
+    import json
+    import types
+
+    import bench
+
+    calls: list[list[str]] = []
+
+    def fake_run(cmd, **kwargs):
+        calls.append(cmd)
+        if "--mp-only" in cmd:
+            out = {"ratio": 0.9}
+        else:
+            cores = int(cmd[cmd.index("--cores") + 1])
+            out = {"turns_per_sec": 1000.0 * cores * (0.85 if cores > 2 else 1.0)}
+        return types.SimpleNamespace(stdout="noise\n" + json.dumps(out) + "\n")
+
+    paths: list[int] = []
+    monkeypatch.setattr(bench.subprocess, "run", fake_run)
+    monkeypatch.setattr(bench, "bandwidth_probe", lambda *a, **k: 10.0)
+    monkeypatch.setattr(bench, "transcripts_path", lambda n, seed=42: paths.append(n) or "x")
+
+    rec = bench.scaling_measurement()
+
+    assert paths == [bench.SCALING_TURNS]
+    assert rec["pair_ratios"] == [0.85] * bench.SCALING_PAIRS
+    assert rec["probes_gbs"] == [10.0] * bench.SCALING_PAIRS
+    assert rec["mp_envelope"] == {"ratio": 0.9}
+    assert rec["efficiency"] == 0.85
+    assert rec["efficiency_vs_envelope"] == round(0.85 / 0.9, 3)
+    # warm-up leg + two legs per pair + the envelope
+    assert len(calls) == 1 + 2 * bench.SCALING_PAIRS + 1

@@ -1166,3 +1166,70 @@ def test_artifact_key_tracks_content(tmp_path):
     kd1 = _artifact_key(str(d))
     (d / "part-1.parquet").write_bytes(b"bbb")
     assert _artifact_key(str(d)) != kd1
+
+
+def test_wave_one_pass_outputs_and_lineage(spark, transcripts_pdf, tmp_path):
+    """Each wave runs its plan once with no cache, derives metrics/ from the
+    partitions it wrote, and writes its lineage rows as one file. Lineage
+    written by the previous writer (a list through createDataFrame, four
+    files per wave) still reads together with the new files on resume."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from piperider_spark.pipeline import LINEAGE_SCHEMA
+    from piperider_spark.rules.spec import DEFAULT_SPEC
+
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(transcripts_pdf, inp)
+    out = str(tmp_path / "out")
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet()}
+
+    before = persisted()
+    r1 = run_pipeline(spark, inp, out, n_buckets=4, wave_buckets=2, conv_rollup=True)
+    assert r1.buckets_processed == 4
+    assert persisted() == before, "a wave left an RDD persisted"
+
+    # one lineage file per wave
+    assert len(glob.glob(out + "/lineage/*.parquet")) == 2
+
+    # n_<reason> counts exactly the reasons recorded in decisions/
+    dec = spark.read.parquet(r1.decisions_path).select("bucket", "reasons").toPandas()
+    met = spark.read.parquet(r1.metrics_path).toPandas().set_index("bucket")
+    assert met["n_turns"].sum() == len(transcripts_pdf)
+    for b, rows in dec.groupby("bucket"):
+        for name in DEFAULT_SPEC.reason_order:
+            want = sum(name in list(r) for r in rows["reasons"])
+            assert met.loc[b, f"n_{name}"] == want, (b, name)
+    assert met[[f"n_{n}" for n in DEFAULT_SPEC.reason_order]].to_numpy().sum() > 0
+
+    # lineage from the old writer, appended next to the new files: same
+    # parquet schema, and a resume still skips every bucket
+    old_rows = [tuple(r) for r in spark.read.parquet(r1.lineage_path).collect()]
+    spark.createDataFrame(old_rows, LINEAGE_SCHEMA).write.mode("append").parquet(
+        r1.lineage_path
+    )
+    files = glob.glob(out + "/lineage/*.parquet")
+    assert len(files) > 2
+    schemas = {pq.read_schema(f).remove_metadata().to_string() for f in files}
+    assert len(schemas) == 1
+    r2 = run_pipeline(spark, inp, out, n_buckets=4, wave_buckets=2, conv_rollup=True)
+    assert r2.buckets_processed == 0 and r2.buckets_skipped == 4
+
+
+def test_mistyped_artifact_path_is_a_value_error(spark, tmp_path):
+    """A missing artifact path names itself in a ValueError instead of
+    surfacing os.stat's FileNotFoundError."""
+    from piperider_spark.pipeline import _artifact_key
+
+    missing = str(tmp_path / "dsir_ratoi")
+    with pytest.raises(ValueError, match="dsir_ratoi"):
+        _artifact_key(missing)
+
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(generate_transcripts(200, seed=35), inp)
+    with pytest.raises(ValueError, match="dsir_ratoi"):
+        run_pipeline(spark, inp, str(tmp_path / "out"), n_buckets=2, dsir_ratio_path=missing)

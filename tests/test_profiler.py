@@ -742,3 +742,17 @@ def test_csv_reader_user_options_override(spark, tmp_path):
     # duplicate basenames list once
     (tmp_path / "t.json").write_text('{"a": 1}\n')
     assert DataSource("s", path=str(tmp_path)).list_tables(spark) == ["t"]
+
+
+def test_bare_table_name_with_extension_uses_its_format(spark, tmp_path):
+    """A table named with its own extension ("events.csv") reads in that
+    extension's format, not the source's parquet default."""
+    from piperider_spark.sources.registry import DataSource
+
+    (tmp_path / "events.csv").write_text("a,b\n1,x\n2,y\n3,z\n")
+    ds = DataSource("s", path=str(tmp_path))
+    assert ds.fmt == "parquet"
+    assert ds._resolve("events.csv") == (str(tmp_path / "events.csv"), "csv")
+    df = ds.read_table(spark, "events.csv")
+    assert df.columns == ["a", "b"]
+    assert df.count() == 3

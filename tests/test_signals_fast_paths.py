@@ -309,3 +309,60 @@ def test_scrub_unicode_case_equivalents_match_serial():
     s = pd.Series(cases, dtype=object)
     assert scrub_series(s).tolist() == [scrub_text(t) for t in cases]
     assert scrub_text("ſcumbucket is here") == "<TOX> is here"
+
+
+def _live_sre_groups() -> tuple[tuple[int, ...], ...]:
+    """The running interpreter's IGNORECASE extra-equivalence groups:
+    ``_equivalences`` up to Python 3.10, ``re._casefix._EXTRA_CASES``
+    (keyed by lowercase code point) from 3.11 on."""
+    import re
+
+    live = getattr(re._compiler, "_equivalences", None)
+    if live is not None:
+        return tuple(live)
+    from re import _casefix
+
+    return tuple((k, *v) for k, v in _casefix._EXTRA_CASES.items())
+
+
+def test_scrub_case_fold_fallback_covers_live_latin_groups():
+    """The pinned fallback table must fold every member of each live group
+    that contains an ASCII letter (the only groups an ASCII lexicon can
+    reach) to that letter, so the candidate scan cannot change with the
+    interpreter's internal tables."""
+    from piperider_spark.scrub import rules as R
+
+    fallback = {
+        cp: chr(group[0]) for group in R._SRE_EQUIV_FALLBACK for cp in group[1:]
+    }
+    latin = [g for g in _live_sre_groups() if any(cp < 128 for cp in g)]
+    assert latin, "no ASCII-reachable group found in the live sre table"
+    for group in latin:
+        (letter,) = [chr(cp) for cp in group if cp < 128]
+        for cp in group:
+            assert chr(cp).lower().translate(fallback) == letter, (hex(cp), group)
+
+
+def test_scrub_case_fold_tables_match_regex_engine():
+    """Behavioural pin over all of Unicode: every code point the regex
+    engine matches case-insensitively against an ASCII letter folds to
+    that letter under lower() + the case table (active and fallback), or
+    changes length under lower() (the scan's full-blob fallback path)."""
+    import re
+    import string
+
+    from piperider_spark.scrub import rules as R
+
+    fallback = {
+        cp: chr(group[0]) for group in R._SRE_EQUIV_FALLBACK for cp in group[1:]
+    }
+    universe = "".join(
+        chr(cp) for cp in range(0x110000) if not 0xD800 <= cp <= 0xDFFF
+    )
+    for letter in string.ascii_lowercase:
+        for m in re.finditer(letter, universe, re.IGNORECASE):
+            low = m.group().lower()
+            if len(low) != 1:
+                continue
+            for table in (R._CASE_EQUIV_TABLE, fallback):
+                assert low.translate(table) == letter, (hex(ord(m.group())), letter)
