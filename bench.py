@@ -10,8 +10,12 @@ Prints ONE JSON line:
   {"metric": "headline_total", "value": <sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": 0.1,
    "pipeline": {"turns": n, "sec": s, "turns_per_sec": r},
-   "scaling": {"n_cores": 8, "n4_cores": 32, "tps_n": ..., "tps_4n": ...,
-               "efficiency": ...}}
+   "probe_gbs": <DRAM copy GB/s measured just before the pipeline phase>,
+   "scaling": {"n_cores": 2, "n4_cores": 8, "nproc": ..., "tps_n": ...,
+               "tps_4n": ..., "efficiency": ...}}
+
+On a host with fewer than ``n4_cores`` CPUs, ``scaling`` is
+``{"n_cores", "n4_cores", "nproc", "error"}`` and no scaling leg runs.
 
 ``--pipeline-only --cores N`` runs just the pipeline at a fixed parallelism
 and prints its own JSON line — used as the subprocess worker for the scaling
@@ -110,6 +114,11 @@ SCALING_TURNS = 3_000_000
 # budget check below stops extra pairs early rather than being killed
 # mid-protocol by an external timeout.
 SCALING_PAIRS = 3
+
+
+def nproc() -> int:
+    """CPUs this process may run on (what ``nproc`` prints)."""
+    return len(os.sched_getaffinity(0))
 
 
 def transcripts_path(n_turns: int, seed: int = 42) -> str:
@@ -344,9 +353,23 @@ def scaling_measurement() -> dict:
     (e) legs alternate order across pairs ((N,4N), (4N,N), …) so monotonic
         load drift within the session cannot bias the ratio one way.
     All pairs, all leg samples, probes, and the rejected set are reported.
+
+    On a host with fewer than SCALING_4N CPUs, ``taskset -c 0-{4N-1}``
+    silently masks to the CPUs that exist, so the wide leg would run
+    oversubscribed: the record then carries ``nproc`` and an ``error``
+    instead of a ratio, and no leg runs.
     """
     import shutil
 
+    cpus = nproc()
+    if cpus < SCALING_4N:
+        return {
+            "n_cores": SCALING_N,
+            "n4_cores": SCALING_4N,
+            "nproc": cpus,
+            "error": f"nproc {cpus} < {SCALING_4N}: the {SCALING_4N}-core leg "
+            "cannot be pinned, so no ratio is measured",
+        }
     inner_reps = {SCALING_N: 2, SCALING_4N: 2}
     taskset = shutil.which("taskset")
 
@@ -441,6 +464,7 @@ def scaling_measurement() -> dict:
     result: dict = {
         "n_cores": SCALING_N,
         "n4_cores": SCALING_4N,
+        "nproc": cpus,
         "turns": SCALING_TURNS,
         "tps_n_reps": legs_n,
         "tps_4n_reps": legs_4n,
@@ -555,7 +579,9 @@ def main() -> None:
 
     # pipeline throughput at the bench parallelism on sf-scaled transcripts
     n_turns = int(4_000_000 * sf) if sf else 400_000
-    pipeline = run_pipeline_bench(spark, transcripts_path(n_turns), reps=2)
+    path = transcripts_path(n_turns)
+    probe_gbs = bandwidth_probe()  # the box's DRAM state for this phase
+    pipeline = run_pipeline_bench(spark, path, reps=2)
     spark.stop()
 
     result = {
@@ -565,6 +591,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "pipeline": pipeline,
+        "probe_gbs": probe_gbs,
     }
     # Checkpoint line BEFORE the ~10-minute scaling phase: the record is
     # parsed from the LAST JSON line of stdout, so if an external timeout

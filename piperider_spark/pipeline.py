@@ -15,7 +15,9 @@ Scale design (SURVEY.md §3.1 "Spark rebuild lifecycle"):
   balanced in expectation) — plus AQE skew handling for the residual tail.
 * One pass per wave: the fused plan runs once, uncached, into the
   decisions write; metrics/ and conversations/ are aggregated from a narrow
-  parquet read of the bucket partitions the wave just wrote.
+  parquet read of the bucket partitions the wave just wrote. Those two
+  writes and the wave's lineage append run on a background writer while the
+  main thread writes the next wave's decisions.
 * Lineage/resume: each completed bucket writes one lineage row (run_id,
   bucket, modes, wave wall ms), one file per wave from a driver-side Arrow
   table (no Python worker). A restarted run anti-joins finished buckets and
@@ -31,9 +33,11 @@ import json
 import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -254,6 +258,14 @@ def run_pipeline(
 ) -> PipelineResult:
     """Execute (or resume) the filter job over a transcripts parquet/dir.
 
+    Buckets are processed in waves of ``wave_buckets``. Each wave's
+    metrics/ and conversations/ writes and its lineage commit run in the
+    background while the next wave's decisions are written, so a crash can
+    lose up to two waves: one wave's decisions write plus the previous
+    wave's pending aggregates. Neither is in lineage, so a resume redoes
+    both. An error in the background writer is raised from here once the
+    wave in flight on the calling thread has been written.
+
     Outputs under ``output_dir``:
       decisions/      conv_id, turn_idx, role, ts, keep, reasons, lang, ppl,
                       text_scrubbed — partitioned by bucket
@@ -460,7 +472,10 @@ def run_pipeline(
     if dedup_mode != "none" and not dup_reuse:
         # ONE corpus-wide pass per staging+mode. Exact leg: conversation
         # rollup (single shuffle on conv_id, map-side partial collect_list)
-        # + fingerprint groupBy on a 16-byte key + join back. Near leg:
+        # + group stats as window aggregates over fp (one shuffle on a
+        # 16-byte key; a groupBy + join back would plan the rollup and the
+        # staged/ scan twice, since the join side's Filter blocks exchange
+        # reuse). Near leg:
         # MinHash-LSH pairs over the rollup (bucket-capped banded join,
         # exact-Jaccard verify — eager-materializing) + label-propagation
         # components; canonical = the cluster's min conv_id, matching the
@@ -483,13 +498,16 @@ def run_pipeline(
         if conv_dedup and bloom_history:
             rolled = rolled.persist()
         if conv_dedup:
-            convs = rolled.select("conv_id", fingerprint("conv_text").alias("fp"))
-            stats = convs.groupBy("fp").agg(
-                F.count(F.lit(1)).alias("group_size"),
-                F.min("conv_id").alias("canonical_conv_id"),
-            )
+            by_fp = Window.partitionBy("fp")
             legs.append(
-                convs.join(stats, "fp")
+                rolled.select("conv_id", fingerprint("conv_text").alias("fp"))
+                .where(F.col("fp").isNotNull())
+                .withColumns(
+                    {
+                        "group_size": F.count(F.lit(1)).over(by_fp),
+                        "canonical_conv_id": F.min("conv_id").over(by_fp),
+                    }
+                )
                 .where(
                     (F.col("group_size") > 1)
                     & (F.col("conv_id") != F.col("canonical_conv_id"))
@@ -854,178 +872,77 @@ def run_pipeline(
 
     todo = [b for b in range(n_buckets) if b not in done]
     processed = 0
-    # Process pending buckets in waves: ONE job per wave (not per bucket — a
-    # per-bucket loop would rescan the input n_buckets times). The wave size
-    # bounds how much work a crash can lose; lineage commits per wave.
-    for w in range(0, len(todo), max(wave_buckets, 1)):
-        wave = todo[w : w + max(wave_buckets, 1)]
-        t0 = time.time()
-        # partition-column predicate → directory pruning at the scan
-        part = src.where(F.col("bucket").isin(wave))
-        if dedup_mode != "none":
-            # explicit schema: a dup-free corpus writes a file-less sidecar
-            # (only _SUCCESS), which schema inference cannot read
-            dup_wave = (
-                spark.read.schema(dup_schema)
-                .parquet(dup_convs_path)
-                .where(F.col("bucket").isin(wave))
-                .select("conv_id")
-            )
-            # left-anti on conv_id: both sides pruned to this wave's
-            # buckets; no broadcast hint — the dup list is usually tiny
-            # (AQE broadcasts it) but is corpus-shaped in the worst case
-            part = part.join(dup_wave, "conv_id", "left_anti")
-        if dsir_arr is not None:
-            # zero-shuffle projection: the fitted table rides the plan as
-            # one array literal (dsir.dsir_score_col), no per-wave joins
-            from piperider_spark.operators.dsir import dsir_score_col
+    conversations_path = os.path.join(output_dir, "conversations")
 
-            part = part.withColumn("dsir_score", dsir_score_col("text", dsir_arr))
-        if substr_bloom is not None:
-            # zero-shuffle projection: row-local window hashes + broadcast
-            # bitset probe (operators/dedup.window_seen_stats), no join
-            # against the archive
-            from piperider_spark.operators.dedup import window_seen_stats
-
-            part = (
-                window_seen_stats(
-                    part,
-                    substr_bloom,
-                    k_tokens=int(substr_bloom["k_tokens"]),
-                    bits_bc=substr_bits_bc,
-                )
-                .withColumnRenamed("seen_frac", "substr_seen_frac")
-                .drop("n_tokens", "seen_windows", "seen_token_cov")
-            )
-        if bpe_merges is not None:
-            # zero-shuffle projection: JVM pre-tokenize + one Arrow crossing
-            # returning only the count (operators/bpe.bpe_subword_count_col)
-            # — the frozen tokenizer rides every wave's plan, no joins
-            from piperider_spark.operators.bpe import bpe_subword_count_col
-
-            part = part.withColumn(
-                "n_bpe_subwords", bpe_subword_count_col(bpe_merges, "text")
-            )
-        if clf_model is not None:
-            # zero-shuffle projection: weight-array-literal sigmoid fold
-            # (operators/classifier.classifier_score_col), no joins
-            from piperider_spark.operators.classifier import classifier_score_col
-
-            part = part.withColumn(
-                "clf_score", classifier_score_col("text", clf_model)
-            )
-        if langid_model is not None:
-            # zero-shuffle projection: staged prefix → gram buckets →
-            # one margins fold (operators/langid_model.langid_scored);
-            # the frozen `lang` column is untouched — ft_lang rides NEXT
-            # to it (the documented swap seam, observed before cut over)
-            from piperider_spark.operators.langid_model import langid_scored
-
-            part = langid_scored(part, langid_model, "text")
-        # Make dynamic overwrite EXACT for reprocessed buckets: a mode-flip
-        # reprocess that yields ZERO rows for a bucket writes no partition
-        # at all, and dynamic overwrite would leave the previous
-        # processing's rows behind while lineage records the bucket done
-        # under the new mode (review finding). Every bucket in this wave is
-        # in `todo` — i.e. NOT committed under the current modes — so
-        # purging its partitions is safe; a crash before the lineage append
-        # leaves the bucket not-done and it reprocesses.
-        import shutil as _sh
-
-        for _base in (
-            decisions_path,
-            metrics_path,
-            os.path.join(output_dir, "conversations"),
-        ):
-            for _b in wave:
-                _sh.rmtree(os.path.join(_base, f"bucket={_b}"), ignore_errors=True)
-
-        # No cache: the decisions write is the ONLY consumer of `decided`, so
-        # the fused signals/scrub UDF and the lag-window shuffle run once per
-        # row, and AQE may coalesce the post-window stage (it cannot inside
-        # a cached plan).
-        decided = build_decisions(part, spec)
-
-        out_cols = [
-            "bucket", "conv_id", "turn_idx", "role", "ts",
-            "keep", "reasons", "lang", "ppl", "text_scrubbed",
+    def write_metrics(read_back: DataFrame) -> None:
+        # per-bucket metrics: PipeRider's run.json per partition (SURVEY
+        # §7.1 item 5) — one groupBy(bucket) (partial agg map-side).
+        # `reasons` is built from exactly the coalesced r_* flags
+        # (rules/heuristics.apply_rules), so counting names is exact.
+        reason_aggs = [
+            F.sum(F.array_contains("reasons", name).cast("long")).alias(f"n_{name}")
+            for name in spec.reason_order
         ]
-        if dsir_arr is not None:
-            out_cols.append("dsir_score")
-        if substr_bloom is not None:
-            out_cols.append("substr_seen_frac")
-        if bpe_merges is not None:
-            out_cols.append("n_bpe_subwords")
-        if clf_model is not None:
-            out_cols.append("clf_score")
-        if langid_model is not None:
-            out_cols.extend(["ft_lang", "ft_lang_prob"])
-        out = decided.select(*out_cols)
         (
-            out.repartition("bucket")
-            .sortWithinPartitions("conv_id", "turn_idx")  # stable north-rule ordering
-            .write.mode("overwrite")  # dynamic: replaces only this wave's buckets
+            read_back.groupBy("bucket")
+            .agg(
+                F.count(F.lit(1)).alias("n_turns"),
+                F.sum(F.col("keep").cast("long")).alias("n_kept"),
+                F.count_distinct("conv_id").alias("n_convs"),
+                F.min("ts").alias("ts_min"),
+                F.max("ts").alias("ts_max"),
+                *reason_aggs,
+            )
+            .withColumn("run_id", F.lit(run_id))
+            .repartition("bucket")
+            .write.mode("overwrite")  # dynamic: idempotent under crash-resume
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
-            .parquet(decisions_path)
+            .parquet(metrics_path)
         )
 
-        # Read back ONLY this wave's partition dirs (listing all of
-        # decisions/ would cost a job per wave at 10^4 buckets), with the
-        # written plan's schema (inference would cost another job). A bucket
-        # with zero rows has no dir, so an empty wave writes no metrics or
-        # conversations rows.
-        written = [
-            d
-            for d in (os.path.join(decisions_path, f"bucket={b}") for b in wave)
-            if os.path.isdir(d)
-        ]
-        if written:
-            narrow = ("bucket", "conv_id", "role", "ts", "keep", "reasons")
-            read_back = (
-                spark.read.schema(StructType([out.schema[c] for c in narrow]))
-                .option("basePath", decisions_path)
-                .parquet(*written)
-            )
-            # per-bucket metrics: PipeRider's run.json per partition (SURVEY
-            # §7.1 item 5) — one groupBy(bucket) (partial agg map-side).
-            # `reasons` is built from exactly the coalesced r_* flags
-            # (rules/heuristics.apply_rules), so counting names is exact.
-            reason_aggs = [
-                F.sum(F.array_contains("reasons", name).cast("long")).alias(
-                    f"n_{name}"
+    def write_conversations(read_back: DataFrame) -> None:
+        # bucket is a pure function of conv_id — recompute it on the
+        # conversation-grain rows (no join back to the turn-grain data)
+        (
+            conversation_rollup(read_back, conv_min_keep_frac)
+            .withColumn("bucket", _bucket_col(n_buckets))
+            .repartition("bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(conversations_path)
+        )
+
+    def finish_wave(
+        wave: list[int], written: list[str], read_schema: StructType, t0: float
+    ) -> None:
+        """A wave's aggregates and lineage commit, on the writer thread:
+        metrics/ here and conversations/ on the pool's other worker at the
+        same time, then the lineage append once both have succeeded. A
+        bucket with zero rows has no decisions dir, so an empty wave writes
+        no metrics or conversations rows."""
+        side = None
+        try:
+            if written:
+                # only this wave's partition dirs (listing all of decisions/
+                # would cost a job per wave at 10^4 buckets), with the
+                # written plan's schema (inference would cost another job)
+                read_back = (
+                    spark.read.schema(read_schema)
+                    .option("basePath", decisions_path)
+                    .parquet(*written)
                 )
-                for name in spec.reason_order
-            ]
-            (
-                read_back.groupBy("bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("n_turns"),
-                    F.sum(F.col("keep").cast("long")).alias("n_kept"),
-                    F.count_distinct("conv_id").alias("n_convs"),
-                    F.min("ts").alias("ts_min"),
-                    F.max("ts").alias("ts_max"),
-                    *reason_aggs,
-                )
-                .withColumn("run_id", F.lit(run_id))
-                .repartition("bucket")
-                .write.mode("overwrite")  # dynamic: idempotent under crash-resume
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(metrics_path)
-            )
-            if conv_rollup:
-                # bucket is a pure function of conv_id — recompute it on the
-                # conversation-grain rows (no join back to the turn-grain data)
-                (
-                    conversation_rollup(read_back, conv_min_keep_frac)
-                    .withColumn("bucket", _bucket_col(n_buckets))
-                    .repartition("bucket")
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("bucket")
-                    .parquet(os.path.join(output_dir, "conversations"))
-                )
+                if conv_rollup:
+                    side = pool.submit(
+                        inheritable_thread_target(spark)(write_conversations),
+                        read_back,
+                    )
+                write_metrics(read_back)
+        finally:
+            side_err = side.exception() if side is not None else None
+        if side_err is not None:
+            raise side_err
 
         # Lineage from a driver-side Arrow table: a LocalTableScan, so no
         # Python worker starts to store a handful of rows; one file per wave.
@@ -1056,7 +973,144 @@ def run_pipeline(
             .write.mode("append")
             .parquet(lineage_path)
         )
-        processed += len(wave)
+
+    # Process pending buckets in waves: ONE job per wave (not per bucket — a
+    # per-bucket loop would rescan the input n_buckets times). The main
+    # thread writes each wave's decisions; the writer thread then takes the
+    # wave's aggregates and lineage commit while the main thread writes the
+    # next wave's decisions. At most one wave's post-work is in flight, so
+    # lineage appends stay serial and no two jobs write the same path; a
+    # crash loses at most two waves. Every thread target is wrapped in
+    # inheritable_thread_target so background jobs keep the caller's job
+    # group and local properties; it is wrapped per submit because each wrap
+    # clones them, and two threads sharing one copy would overwrite each
+    # other's SQL execution id.
+    pending = None  # the previous wave's finish_wave future
+    with ThreadPoolExecutor(max_workers=2, thread_name_prefix="wave-writer") as pool:
+        for w in range(0, len(todo), max(wave_buckets, 1)):
+            wave = todo[w : w + max(wave_buckets, 1)]
+            t0 = time.time()
+            # partition-column predicate → directory pruning at the scan
+            part = src.where(F.col("bucket").isin(wave))
+            if dedup_mode != "none":
+                # explicit schema: a dup-free corpus writes a file-less sidecar
+                # (only _SUCCESS), which schema inference cannot read
+                dup_wave = (
+                    spark.read.schema(dup_schema)
+                    .parquet(dup_convs_path)
+                    .where(F.col("bucket").isin(wave))
+                    .select("conv_id")
+                )
+                # left-anti on conv_id: both sides pruned to this wave's
+                # buckets; no broadcast hint — the dup list is usually tiny
+                # (AQE broadcasts it) but is corpus-shaped in the worst case
+                part = part.join(dup_wave, "conv_id", "left_anti")
+            if dsir_arr is not None:
+                # zero-shuffle projection: the fitted table rides the plan as
+                # one array literal (dsir.dsir_score_col), no per-wave joins
+                from piperider_spark.operators.dsir import dsir_score_col
+
+                part = part.withColumn("dsir_score", dsir_score_col("text", dsir_arr))
+            if substr_bloom is not None:
+                # zero-shuffle projection: row-local window hashes + broadcast
+                # bitset probe (operators/dedup.window_seen_stats), no join
+                # against the archive
+                from piperider_spark.operators.dedup import window_seen_stats
+
+                part = (
+                    window_seen_stats(
+                        part,
+                        substr_bloom,
+                        k_tokens=int(substr_bloom["k_tokens"]),
+                        bits_bc=substr_bits_bc,
+                    )
+                    .withColumnRenamed("seen_frac", "substr_seen_frac")
+                    .drop("n_tokens", "seen_windows", "seen_token_cov")
+                )
+            if bpe_merges is not None:
+                # zero-shuffle projection: JVM pre-tokenize + one Arrow crossing
+                # returning only the count (operators/bpe.bpe_subword_count_col)
+                # — the frozen tokenizer rides every wave's plan, no joins
+                from piperider_spark.operators.bpe import bpe_subword_count_col
+
+                part = part.withColumn(
+                    "n_bpe_subwords", bpe_subword_count_col(bpe_merges, "text")
+                )
+            if clf_model is not None:
+                # zero-shuffle projection: weight-array-literal sigmoid fold
+                # (operators/classifier.classifier_score_col), no joins
+                from piperider_spark.operators.classifier import classifier_score_col
+
+                part = part.withColumn(
+                    "clf_score", classifier_score_col("text", clf_model)
+                )
+            if langid_model is not None:
+                # zero-shuffle projection: staged prefix → gram buckets →
+                # one margins fold (operators/langid_model.langid_scored);
+                # the frozen `lang` column is untouched — ft_lang rides NEXT
+                # to it (the documented swap seam, observed before cut over)
+                from piperider_spark.operators.langid_model import langid_scored
+
+                part = langid_scored(part, langid_model, "text")
+            # Make dynamic overwrite EXACT for reprocessed buckets: a mode-flip
+            # reprocess that yields ZERO rows for a bucket writes no partition
+            # at all, and dynamic overwrite would leave the previous
+            # processing's rows behind while lineage records the bucket done
+            # under the new mode (review finding). Every bucket in this wave is
+            # in `todo` — i.e. NOT committed under the current modes — so
+            # purging its partitions is safe; a crash before the lineage append
+            # leaves the bucket not-done and it reprocesses.
+            import shutil as _sh
+
+            for _base in (decisions_path, metrics_path, conversations_path):
+                for _b in wave:
+                    _sh.rmtree(os.path.join(_base, f"bucket={_b}"), ignore_errors=True)
+
+            # No cache: the decisions write is the ONLY consumer of `decided`, so
+            # the fused signals/scrub UDF and the lag-window shuffle run once per
+            # row, and AQE may coalesce the post-window stage (it cannot inside
+            # a cached plan).
+            decided = build_decisions(part, spec)
+
+            out_cols = [
+                "bucket", "conv_id", "turn_idx", "role", "ts",
+                "keep", "reasons", "lang", "ppl", "text_scrubbed",
+            ]
+            if dsir_arr is not None:
+                out_cols.append("dsir_score")
+            if substr_bloom is not None:
+                out_cols.append("substr_seen_frac")
+            if bpe_merges is not None:
+                out_cols.append("n_bpe_subwords")
+            if clf_model is not None:
+                out_cols.append("clf_score")
+            if langid_model is not None:
+                out_cols.extend(["ft_lang", "ft_lang_prob"])
+            out = decided.select(*out_cols)
+            (
+                out.repartition("bucket")
+                .sortWithinPartitions("conv_id", "turn_idx")  # stable north-rule ordering
+                .write.mode("overwrite")  # dynamic: replaces only this wave's buckets
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(decisions_path)
+            )
+
+            written = [
+                d
+                for d in (os.path.join(decisions_path, f"bucket={b}") for b in wave)
+                if os.path.isdir(d)
+            ]
+            narrow = ("bucket", "conv_id", "role", "ts", "keep", "reasons")
+            read_schema = StructType([out.schema[c] for c in narrow])
+            if pending is not None:
+                pending.result()  # the previous wave's commit, or its error
+            pending = pool.submit(
+                inheritable_thread_target(spark)(finish_wave), wave, written, read_schema, t0
+            )
+            processed += len(wave)
+        if pending is not None:
+            pending.result()
 
     if bloom_out:
         # next epoch's snapshot: history ∪ this corpus' conversation
@@ -1144,7 +1198,9 @@ def main() -> None:  # pragma: no cover — spark-submit entry
         "--wave-buckets",
         type=int,
         default=8,
-        help="buckets per wave job (bounds crash-loss granularity; default 8)",
+        help="buckets per wave job (default 8); a crash can lose up to two "
+        "waves: one wave's decisions plus the previous wave's pending "
+        "aggregates",
     )
     p.add_argument(
         "--conv-dedup",

@@ -107,9 +107,17 @@ def _make_dup_state_fn(ttl_ms: int | None):
             if len(chunks) > 1
             else chunks[0]
         ).sort_values("turn_idx", kind="mergesort")
+        # rows at or below the frontier committed by EARLIER micro-batches
+        # are late; rows of this batch are compared in sorted order, so a
+        # turn_idx repeated inside one batch compares like an in-order row
+        # (batch lag-1 semantics: a repeat of byte-equal text is flagged).
+        # Which of two unequal repeats is compared to which follows arrival
+        # order here and is unspecified in batch — the lag window's order
+        # among ties is undefined there.
+        frontier = last_idx
         flags = []
         for t_idx, text in zip(pdf["turn_idx"], pdf["text"]):
-            if last_idx >= 0 and int(t_idx) <= last_idx:
+            if frontier >= 0 and int(t_idx) <= frontier:
                 # LATE ARRIVAL below the committed frontier (cross-micro-batch
                 # reordering / at-least-once replay): its true lag neighbour
                 # already shipped, so comparing against the frontier digest

@@ -90,9 +90,11 @@ def test_scaling_measurement_protocol_end_to_end(monkeypatch):
     monkeypatch.setattr(bench.subprocess, "run", fake_run)
     monkeypatch.setattr(bench, "bandwidth_probe", lambda *a, **k: 10.0)
     monkeypatch.setattr(bench, "transcripts_path", lambda n, seed=42: paths.append(n) or "x")
+    monkeypatch.setattr(bench, "nproc", lambda: bench.SCALING_4N)
 
     rec = bench.scaling_measurement()
 
+    assert rec["nproc"] == bench.SCALING_4N
     assert paths == [bench.SCALING_TURNS]
     assert rec["pair_ratios"] == [0.85] * bench.SCALING_PAIRS
     assert rec["probes_gbs"] == [10.0] * bench.SCALING_PAIRS
@@ -101,3 +103,24 @@ def test_scaling_measurement_protocol_end_to_end(monkeypatch):
     assert rec["efficiency_vs_envelope"] == round(0.85 / 0.9, 3)
     # warm-up leg + two legs per pair + the envelope
     assert len(calls) == 1 + 2 * bench.SCALING_PAIRS + 1
+
+
+def test_scaling_refuses_hosts_smaller_than_the_wide_leg(monkeypatch):
+    """With fewer CPUs than the wide leg, taskset masks the pin to the CPUs
+    that exist and the wide leg runs oversubscribed. The record must say so
+    with an error and the host's nproc, and run no leg at all."""
+    import bench
+
+    def no_call(*a, **k):
+        raise AssertionError("no leg, probe or input may run")
+
+    monkeypatch.setattr(bench.subprocess, "run", no_call)
+    monkeypatch.setattr(bench, "bandwidth_probe", no_call)
+    monkeypatch.setattr(bench, "transcripts_path", no_call)
+    monkeypatch.setattr(bench, "nproc", lambda: bench.SCALING_4N - 1)
+
+    rec = bench.scaling_measurement()
+
+    assert rec["nproc"] == bench.SCALING_4N - 1
+    assert "nproc" in rec["error"]
+    assert "efficiency" not in rec and "pair_ratios" not in rec

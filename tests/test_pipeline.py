@@ -1233,3 +1233,154 @@ def test_mistyped_artifact_path_is_a_value_error(spark, tmp_path):
     _write_pdf(generate_transcripts(200, seed=35), inp)
     with pytest.raises(ValueError, match="dsir_ratoi"):
         run_pipeline(spark, inp, str(tmp_path / "out"), n_buckets=2, dsir_ratio_path=missing)
+
+
+def _frame(path: str, drop: tuple[str, ...] = ()) -> pd.DataFrame:
+    """A parquet output as a sorted pandas frame, for equality checks."""
+    import pyarrow.dataset as ds
+
+    t = ds.dataset(path, format="parquet", partitioning="hive").to_table().to_pandas()
+    t = t.drop(columns=list(drop)).astype(str)
+    return t.sort_values(list(t.columns)).reset_index(drop=True)
+
+
+def test_wave_writer_jobs_keep_the_callers_job_group(spark, transcripts_pdf, tmp_path):
+    """Every job run_pipeline starts, including those of the background
+    wave writer, runs under the caller's job group."""
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(transcripts_pdf, inp)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def marker(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([1]).count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(st.getJobIdsForGroup(group))
+
+    first = marker("before-writer-test")
+    sc.setJobGroup("g", "wave writer job group")
+    try:
+        r = run_pipeline(
+            spark, inp, str(tmp_path / "out"), n_buckets=4, wave_buckets=2,
+            conv_rollup=True,
+        )
+    finally:
+        last = marker("after-writer-test")
+        sc.setJobGroup("", "")
+    assert r.buckets_processed == 4
+    started = set(range(first + 1, last))
+    assert started and set(st.getJobIdsForGroup("g")) == started
+
+
+def test_wave_writer_failure_settles_and_resumes(spark, transcripts_pdf, tmp_path, monkeypatch):
+    """A failing background aggregate write surfaces from run_pipeline only
+    after the wave the main thread has in flight is written, commits no
+    lineage for its wave, leaves no writer thread behind, and a resume
+    produces the outputs of an uninterrupted run."""
+    import os
+    import threading
+
+    from piperider_spark import pipeline
+
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(transcripts_pdf, inp)
+    out = str(tmp_path / "out")
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("injected rollup failure")
+
+    monkeypatch.setattr(pipeline, "conversation_rollup", failing)
+    threads = threading.active_count()
+    kw = dict(n_buckets=4, wave_buckets=2, conv_rollup=True)
+    with pytest.raises(RuntimeError, match="injected rollup failure"):
+        run_pipeline(spark, inp, out, **kw)
+    assert threading.active_count() == threads
+    # the second wave's decisions write finished before the error surfaced
+    assert all(os.path.isdir(f"{out}/decisions/bucket={b}") for b in range(4))
+    lineage = out + "/lineage"
+    committed = (
+        {r.bucket for r in spark.read.parquet(lineage).collect()}
+        if os.path.isdir(lineage)
+        else set()
+    )
+    assert not committed & {0, 1}, committed
+
+    monkeypatch.undo()
+    resumed = run_pipeline(spark, inp, out, **kw)
+    assert resumed.buckets_processed == 4
+    ref = str(tmp_path / "ref")
+    run_pipeline(spark, inp, ref, **kw)
+    for sub, drop in (("decisions", ()), ("metrics", ("run_id",)), ("conversations", ())):
+        pd.testing.assert_frame_equal(
+            _frame(f"{out}/{sub}", drop), _frame(f"{ref}/{sub}", drop), obj=sub
+        )
+
+
+def test_exact_dedup_sidecar_matches_groupby_join_and_scans_once(spark, transcripts_pdf, tmp_path):
+    """The exact-dedup sidecar's window aggregates give the rows of the
+    groupBy(fp) + join-back form, and its executed plan scans staged/ once
+    (the join form scans it, and rolls conversations up, twice)."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from piperider_spark.functions.text import fingerprint
+    from piperider_spark.operators.dedup import conversation_text
+
+    pdf = transcripts_pdf
+    src_ids = sorted(pdf["conv_id"].unique())[:3]
+    clones = [
+        pdf[pdf["conv_id"] == c].assign(conv_id=f"{c}_copy{k}")
+        for i, c in enumerate(src_ids)
+        for k in range(i + 1)  # groups of 2, 3 and 4
+    ]
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(pd.concat([pdf, *clones], ignore_index=True), inp)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, inp, out, n_buckets=4, conv_dedup=True)
+
+    convs = conversation_text(spark.read.parquet(out + "/staged"), sep="\x1e").select(
+        "conv_id", fingerprint("conv_text").alias("fp")
+    )
+    stats = convs.groupBy("fp").agg(
+        F.count(F.lit(1)).alias("group_size"),
+        F.min("conv_id").alias("canonical_conv_id"),
+    )
+    cols = ["conv_id", "canonical_conv_id", "fp", "group_size", "method"]
+    want = (
+        convs.join(stats, "fp")
+        .where((F.col("group_size") > 1) & (F.col("conv_id") != F.col("canonical_conv_id")))
+        .select("conv_id", "canonical_conv_id", "fp", "group_size", F.lit("exact").alias("method"))
+        .toPandas()
+    )
+    got = spark.read.parquet(out + "/dup_convs").select(*cols).toPandas()
+    assert len(got) == 6
+    pd.testing.assert_frame_equal(
+        got.sort_values("conv_id").reset_index(drop=True),
+        want[cols].sort_values("conv_id").reset_index(drop=True),
+    )
+
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    target = f"Arguments: file:{out}/dup_convs,"
+    plans = []
+    executions = store.executionsList().iterator()
+    while executions.hasNext():
+        plan = executions.next().physicalPlanDescription()
+        if target in plan:
+            plans.append(plan)
+    assert len(plans) == 1
+    plan = plans[0]
+    final = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    details = {
+        b.split(")", 1)[0][1:]: b
+        for b in (b.strip() for b in plan.split("\n\n"))
+        if b.startswith("(")
+    }
+    staged_scans = [
+        i
+        for i in re.findall(r"Scan parquet\s+\((\d+)\)", final)
+        if f"{out}/staged]" in details[i]
+    ]
+    assert len(staged_scans) == 1, final

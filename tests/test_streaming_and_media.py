@@ -2092,7 +2092,9 @@ def test_stream_dup_flag_late_arrival_is_conservative(spark, tmp_path):
     frontier (cross-micro-batch reordering) was compared against the
     frontier digest — the wrong neighbour. Late rows must flag False
     (conservative keep) and leave the frontier state intact; in-order
-    conversations keep exact batch equality."""
+    conversations keep exact batch equality. A turn_idx repeated inside
+    one micro-batch compares like an in-order row, as the batch lag
+    window does; repeated in a later micro-batch it is late."""
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -2116,6 +2118,10 @@ def test_stream_dup_flag_late_arrival_is_conservative(spark, tmp_path):
             ("c", 2, "assistant", "same text", None, t0),
             ("o", 0, "user", "aaa", None, t0),
             ("o", 1, "user", "aaa", None, t0),
+            # turn 1 twice in one micro-batch, byte-equal text
+            ("t", 0, "user", "x", None, t0),
+            ("t", 1, "user", "y", None, t0),
+            ("t", 1, "user", "y", None, t0),
         ],
         schema_ddl,
     ).write.parquet(str(inp / "b1.parquet"))
@@ -2150,17 +2156,38 @@ def test_stream_dup_flag_late_arrival_is_conservative(spark, tmp_path):
             for r in spark.read.parquet(sink).collect()
         }
 
+    def flags_t():
+        rows = spark.read.parquet(sink).where(F.col("conv_id") == "t").collect()
+        return sorted((r.turn_idx, r.r_duplicate_turn) for r in rows)
+
     got1 = drain("late1")
     assert got1[("o", 1)] is True  # in-order conversation: exact lag
     assert got1[("c", 2)] is False
+    # the in-batch repeat is flagged once, as the batch lag window flags it
+    from piperider_spark.rules.heuristics import duplicate_turn_col
+
+    batch_t = (
+        spark.read.parquet(str(inp / "b1.parquet"))
+        .where(F.col("conv_id") == "t")
+        .select("turn_idx", duplicate_turn_col().alias("d"))
+        .collect()
+    )
+    want_t = sorted((r.turn_idx, bool(r.d)) for r in batch_t)
+    assert want_t == [(0, False), (1, False), (1, True)]
+    assert flags_t() == want_t
 
     # micro-batch 2: the LATE turn 1 whose text equals turn 2's — the
     # frontier digest; pre-fix it was flagged True against the wrong row
     spark.createDataFrame(
-        [("c", 1, "assistant", "same text", None, t0)], schema_ddl
+        [
+            ("c", 1, "assistant", "same text", None, t0),
+            ("t", 1, "user", "y", None, t0),  # replay at the frontier: late
+        ],
+        schema_ddl,
     ).write.parquet(str(inp / "b2.parquet"))
     got2 = drain("late2")
     assert got2[("c", 1)] is False
+    assert flags_t() == [(0, False), (1, False), (1, False), (1, True)]
 
 
 def test_image_features_tiny_image_no_nan_and_dim_guard(spark):
