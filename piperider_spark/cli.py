@@ -2,7 +2,7 @@
 
     python -m piperider_spark.cli profile  --source <dir> [--table t ...] --output <dir>
     python -m piperider_spark.cli compare  --base run.json --target run.json
-    python -m piperider_spark.cli filter   --input <transcripts> --output <dir>
+    python -m piperider_spark.cli filter   --input <transcripts> --output <dir> [pipeline flags]
     python -m piperider_spark.cli assert   --report run.json --assertions a.json
 
 Reference command mapping: `piperider run` → profile (+ assert),
@@ -131,10 +131,9 @@ def cmd_filter(args: argparse.Namespace) -> int:
     from piperider_spark.pipeline import run_pipeline
     from piperider_spark.session import get_spark
 
-    spark = get_spark("piperider_spark.filter")
-    res = run_pipeline(
-        spark, args.input, args.output, n_buckets=args.buckets, resume=not args.no_resume
-    )
+    # every other attribute is a run_pipeline parameter (add_pipeline_args)
+    kwargs = {k: v for k, v in vars(args).items() if k not in ("cmd", "fn")}
+    res = run_pipeline(get_spark("piperider_spark.filter"), **kwargs)
     print(json.dumps(res.__dict__))
     return 0
 
@@ -155,6 +154,8 @@ def cmd_assert(args: argparse.Namespace) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from piperider_spark.pipeline import add_pipeline_args
+
     p = argparse.ArgumentParser(prog="piperider_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -198,11 +199,7 @@ def main(argv: list[str] | None = None) -> int:
     pd_.set_defaults(fn=cmd_diff_decisions)
 
     pf = sub.add_parser("filter", help="transcript quality-filter pipeline")
-    pf.add_argument("--input", required=True)
-    pf.add_argument("--output", required=True)
-    pf.add_argument("--buckets", type=int, default=16)
-    pf.add_argument("--no-resume", action="store_true")
-    pf.set_defaults(fn=cmd_filter)
+    add_pipeline_args(pf).set_defaults(fn=cmd_filter)
 
     pa = sub.add_parser("assert", help="evaluate assertions against a report")
     pa.add_argument("--report", required=True)

@@ -18,6 +18,12 @@ Scale design (SURVEY.md §3.1 "Spark rebuild lifecycle"):
   parquet read of the bucket partitions the wave just wrote. Those two
   writes and the wave's lineage append run on a background writer while the
   main thread writes the next wave's decisions.
+* Opt-in scorers (DSIR, archive substring overlap, BPE token counts, the
+  distilled quality classifier, learned langid) share one contract: a
+  zero-shuffle projection whose artifact is fitted once per staging into a
+  sidecar (or loaded from a path), with its mode recorded in lineage. Each
+  is one entry in ``run_pipeline``'s stage table; a new stage is one more
+  entry there.
 * Lineage/resume: each completed bucket writes one lineage row (run_id,
   bucket, modes, wave wall ms), one file per wave from a driver-side Arrow
   table (no Python worker). A restarted run anti-joins finished buckets and
@@ -29,15 +35,19 @@ Scale design (SURVEY.md §3.1 "Spark rebuild lifecycle"):
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
+from typing import Any, Callable
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -164,6 +174,27 @@ class PipelineResult:
     lineage_path: str
 
 
+@dataclass
+class _Stage:
+    """One opt-in scorer of ``run_pipeline``: an entry of its stage table.
+
+    Lineage records ``mode`` ("none" when off) as ``<key>_mode``, so
+    resuming under another mode reprocesses. ``load`` reads the stage's
+    artifact once per run: from ``path`` when given (fitted elsewhere),
+    else from ``sidecar``, the dir ``fit()`` writes the artifact table to
+    (restaging purges it; None for a stage that only loads).
+    ``project(df, artifact)`` adds ``columns`` to a wave with no exchange."""
+
+    key: str
+    mode: str
+    columns: tuple[str, ...]
+    project: Callable[[DataFrame, Any], DataFrame]
+    path: str | None
+    load: Callable[[str], Any]
+    sidecar: str | None = None
+    fit: Callable[[], DataFrame] | None = None
+
+
 def _bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
 
@@ -225,6 +256,73 @@ def _spec_sig(spec: RuleSpec) -> str:
     return hashlib.md5(repr(spec).encode()).hexdigest()[:12]
 
 
+def _stage_mode(path: str | None, fit: str | None, suffix: str = "") -> str:
+    """A stage's lineage mode: the loaded artifact's content identity, else
+    its in-run fit, else "none"."""
+    if path:
+        return f"path:{_artifact_key(path)}{suffix}"
+    return f"{fit}{suffix}" if fit else "none"
+
+
+def _fresh(path: str, meta_file: str, meta: dict) -> bool:
+    """The reuse gate of every derived dir (staged/, dup_convs/, fitted
+    sidecars): its write completed (``_SUCCESS``) and the JSON manifest
+    beside it equals ``meta``. The manifest is written after the data, so a
+    crash between the two writes redoes the write."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        return False
+    try:
+        with open(os.path.join(path, meta_file)) as fh:
+            return json.load(fh) == meta
+    except (OSError, ValueError):
+        return False
+
+
+def _fit_or_load(st: _Stage) -> Any:
+    """A stage's artifact, loaded: from its ``path`` when given, else from
+    its sidecar, which ``fit()`` rewrites unless it already holds this
+    mode's fit. Fitted tables are small (at most a few thousand rows), so
+    each is one file."""
+    path = st.path
+    if not path:
+        path = st.sidecar
+        meta_file = f"_{st.key}_meta.json"
+        if not _fresh(path, meta_file, {"mode": st.mode}):
+            st.fit().coalesce(1).write.mode("overwrite").parquet(path)
+            with open(os.path.join(path, meta_file), "w") as fh:
+                json.dump({"mode": st.mode}, fh)
+    return st.load(path)
+
+
+def _lineage_col(lin: DataFrame, name: str, default: Any) -> Column:
+    """Lineage column ``name``, reading ``default`` where it is null or, in
+    lineage written before the column existed, absent: old rows resume as
+    what they were produced under."""
+    if name in lin.columns:
+        return F.coalesce(F.col(name), F.lit(default))
+    return F.lit(default)
+
+
+def _save_epoch_bloom(
+    out: str, hist: dict | None, expected: int | None, build: Callable[..., dict]
+) -> None:
+    """Write the next epoch's Bloom snapshot to ``out``: ``hist`` ∪ this
+    corpus, where ``build(expected=, fpp=, layout=)`` builds the corpus
+    filter in the history's bitset layout. With no history (epoch 1)
+    ``expected`` sizes the layout every later epoch inherits, so size it for
+    the archive's growth horizon: a filter sized for epoch 1 alone
+    saturates (fpp → 1) as insertions accumulate. Derived from staged/ and
+    the history only, so a resumed or no-op run rewrites the same content
+    (save_bloom renames atomically)."""
+    from piperider_spark.operators.dedup import bloom_or, save_bloom
+
+    if hist is None:
+        save_bloom(build(expected=expected, fpp=0.01, layout=None), out)
+    else:
+        cur = build(expected=None, fpp=hist["fpp"], layout=(hist["m_bits"], hist["k"]))
+        save_bloom(bloom_or(hist, cur), out)
+
+
 def run_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -268,7 +366,8 @@ def run_pipeline(
 
     Outputs under ``output_dir``:
       decisions/      conv_id, turn_idx, role, ts, keep, reasons, lang, ppl,
-                      text_scrubbed — partitioned by bucket
+                      text_scrubbed, then each enabled stage's columns —
+                      partitioned by bucket
       metrics/        per-bucket PipeRider-style profile rows
       lineage/        one row per completed (run, bucket)
       conversations/  (when ``conv_rollup``) conversation-grain stats +
@@ -306,88 +405,170 @@ def run_pipeline(
     ``bloom_out`` writes the next epoch's snapshot (history ∪ this corpus,
     same bitset layout) after the waves complete; on the FIRST epoch (no
     history) pass ``bloom_expected`` sized for the archive's growth horizon
-    — every later epoch inherits that layout, and a filter sized only for
-    epoch 1 saturates (fpp →1) as insertions accumulate. The history
-    artifact's identity joins the lineage dedup mode, so resuming against
-    a different snapshot reprocesses buckets.
+    — every later epoch inherits that layout. The history artifact's
+    identity joins the lineage dedup mode, so resuming against a different
+    snapshot reprocesses buckets.
 
-    ``dsir_fit`` (a SQL predicate over the input columns selecting the
-    TARGET slice, e.g. ``"role = 'assistant'"``) fits a DSIR importance
-    model ONCE per staging (operators/dsir.py — two B-bounded aggs, the
-    log-ratio table written to dsir_ratio/ as an audit record) and adds a
-    ``dsir_score`` column to decisions/; ``dsir_ratio_path`` instead loads
-    an externally-fitted table (the production shape: fit offline on a
-    trusted target corpus, score everywhere). Scoring is a zero-shuffle
-    row-local projection (the ≤``dsir_buckets``-row table rides the plan
-    as one array literal), so the stage adds no per-wave exchanges.
-    Lineage records the DSIR mode like the dedup mode: resuming with a
-    different fit/ratio reprocesses rather than mixing scores.
-
-    ``substr_bloom_history`` extends the gate below conversation grain: a
-    WINDOW-grain Bloom snapshot (operators/dedup.build_window_bloom
-    artifact — history's k-token-window hashes) adds a
-    ``substr_seen_frac`` column to decisions/: the fraction of each turn's
-    tokens covered by substrings already present in the archive (merged
-    k-token windows, case-insensitive). Zero shuffle — row-local JVM
-    window hashes + one broadcast-bitset Arrow probe riding the wave plan,
-    never a join against history. Score, not drop: substring overlap is a
-    quality signal (boilerplate, quoted context, templated turns), and the
-    cut belongs downstream with the other signals. ``substr_bloom_out``
-    writes the next epoch's window snapshot (history ∪ this corpus' turn
-    windows, inherited layout; epoch 1 sizes via
-    ``substr_bloom_expected``/``substr_bloom_k``). Lineage records the
-    substring mode like the others: a history flip reprocesses.
-
-    ``clf_train`` distills the rule layer into a learned quality
-    classifier ONCE per staging: the frozen spec's keep labels (one
-    build_decisions pass over the staged input) train a hashed-n-gram
-    logistic regression for that many epochs (operators/classifier.py —
-    one B-bounded shuffle per epoch, exact decimal gradients), the
-    (bucket, weight) artifact is written to clf_model/, and decisions
-    gain a ``clf_score`` column — the keep-probability under the learned
-    model, scored as a zero-shuffle sigmoid projection. ``clf_model_path``
-    instead loads an externally-trained artifact (one frozen classifier
-    across epochs — the production shape). Lineage records the classifier
-    mode like the others: swapping or dropping it reprocesses.
-
-    ``langid_train`` distills the frozen langid heuristic into the
-    fastText-style learned model ONCE per staging: the heuristic's
-    ``lang`` labels (the same build_decisions pass the classifier uses)
-    train the hashed char+word n-gram softmax for that many epochs
-    (operators/langid_model.py — one bounded shuffle per epoch, exact
-    decimal gradients), the (bucket, class, weight) artifact is written
-    to langid_model/, and decisions gain ``ft_lang`` / ``ft_lang_prob``
-    columns — the learned model's prediction scored as a zero-shuffle
-    projection NEXT TO the frozen ``lang`` column (the frozen column
-    stays byte-identical: the learned model occupies the documented
-    swap seam without touching the keep/drop contract).
-    ``langid_model_path`` instead loads an externally-trained artifact
-    (the production shape — e.g. fitted on a genuinely multilingual
-    corpus, where the linear model separates; the synthetic teacher
-    labels here exercise the plumbing). Lineage records the langid mode
-    like the others: swapping or dropping it reprocesses.
-
-    ``bpe_train`` learns a BPE tokenizer of that many merges ONCE per
-    staging (operators/bpe.py — ONE word-count shuffle, then the driver
-    merge loop over the Heaps'-bounded frequency table; the merge table is
-    written to bpe_merges/ as the shippable artifact) and adds an
-    ``n_bpe_subwords`` column to decisions/ — each turn's model-token
-    count under the learned vocabulary, the number token-budget packing
-    and cost accounting run on. ``bpe_merges_path`` instead loads an
-    externally-trained artifact (the production shape: one frozen
-    tokenizer across epochs). Scoring is a zero-shuffle stateless
-    projection (JVM pre-tokenization + one Arrow crossing returning just
-    the count). Lineage records the BPE mode like the others: swapping or
-    dropping the tokenizer reprocesses rather than mixing counts from
-    different vocabularies."""
+    The opt-in scorers — DSIR importance (``dsir_*``), archive substring
+    overlap (``substr_bloom_*``), BPE token counts (``bpe_*``), the
+    distilled quality classifier (``clf_*``) and learned langid
+    (``langid_*``) — are the entries of the stage table in this function,
+    each documented at its entry. Every stage has the same shape: fit once
+    per staging into a sidecar under ``output_dir`` (or load an externally
+    fitted artifact from a path, the production shape), record its mode in
+    lineage so that swapping or dropping it reprocesses rather than mixing
+    outputs, and add its columns to every wave as a zero-shuffle
+    projection. A new stage is one more entry in that table (``_Stage``:
+    its mode, columns, projection, artifact loader and in-run fit), plus
+    its lineage column in ``LINEAGE_SCHEMA``."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    if wave_buckets < 1:
+        raise ValueError(f"wave_buckets must be >= 1, got {wave_buckets}")
     run_id = run_id or uuid.uuid4().hex[:12]
     decisions_path = os.path.join(output_dir, "decisions")
     metrics_path = os.path.join(output_dir, "metrics")
     lineage_path = os.path.join(output_dir, "lineage")
     staged_path = os.path.join(output_dir, "staged")
     dup_convs_path = os.path.join(output_dir, "dup_convs")
+    conversations_path = os.path.join(output_dir, "conversations")
+
+    # The stage table, in decisions/ column order (lineage column order too).
+    # A stage's fit runs after staging, so its lambda reads `src` then.
+    from piperider_spark.operators import bpe as _bpe
+    from piperider_spark.operators import classifier as _clf
+    from piperider_spark.operators import dedup as _dedup
+    from piperider_spark.operators import dsir as _dsir
+    from piperider_spark.operators import langid_model as _lm
+
+    labels: list[DataFrame] = []
+
+    def distill(label: str) -> DataFrame:
+        # the frozen spec's keep and lang labels for the clf and langid
+        # fits: ONE build_decisions pass over staged/, persisted while the
+        # fits read it (the langid fit alone reads its input twice)
+        if not labels:
+            labels.append(build_decisions(src, spec).select("text", "keep", "lang").persist())
+        return labels[0].select("text", label)
+
+    stages = [
+        # DSIR importance: ``dsir_fit`` (a SQL predicate over the input
+        # columns selecting the TARGET slice, e.g. "role = 'assistant'")
+        # fits the log-ratio table (operators/dsir.py — two B-bounded aggs,
+        # ≤ ``dsir_buckets`` rows, kept as an audit record); loaded, it is
+        # one array literal riding the plan to score ``dsir_score``.
+        _Stage(
+            "dsir",
+            _stage_mode(dsir_ratio_path, dsir_fit and f"fit:{dsir_fit}", f":{dsir_buckets}"),
+            columns=("dsir_score",),
+            project=lambda df, arr: df.withColumn("dsir_score", _dsir.dsir_score_col("text", arr)),
+            path=dsir_ratio_path,
+            load=lambda p: _dsir.log_ratio_array(spark.read.parquet(p), n_buckets=dsir_buckets),
+            sidecar=os.path.join(output_dir, "dsir_ratio"),
+            fit=lambda: _dsir.fit_bucket_log_ratio(
+                src, src.where(F.expr(dsir_fit)), text_col="text", n_buckets=dsir_buckets
+            ),
+        ),
+        # Substring overlap with the archive: a WINDOW-grain Bloom snapshot
+        # (operators/dedup.build_window_bloom — history's k-token-window
+        # hashes) scores ``substr_seen_frac``, the fraction of each turn's
+        # tokens covered by substrings already in the archive (merged
+        # k-token windows, case-insensitive). Row-local JVM window hashes +
+        # one broadcast-bitset Arrow probe, never a join against history.
+        # Score, not drop: overlap (boilerplate, quoted context, templated
+        # turns) is a quality signal and the cut belongs downstream.
+        # ``substr_bloom_out`` writes the next epoch's window snapshot
+        # (epoch 1 sizes it via ``substr_bloom_expected``/``substr_bloom_k``).
+        _Stage(
+            "substr",
+            f"bloom:{_artifact_key(substr_bloom_history)}" if substr_bloom_history else "none",
+            columns=("substr_seen_frac",),
+            project=lambda df, bits: (
+                _dedup.window_seen_stats(
+                    df, substr_bloom, k_tokens=int(substr_bloom["k_tokens"]), bits_bc=bits
+                )
+                .withColumnRenamed("seen_frac", "substr_seen_frac")
+                .drop("n_tokens", "seen_windows", "seen_token_cov")
+            ),
+            path=substr_bloom_history,
+            # ONE broadcast of the (potentially GB-scale) bitset for the
+            # whole run; window_seen_stats would otherwise broadcast per wave
+            load=lambda p: spark.sparkContext.broadcast(substr_bloom["bits"]),
+        ),
+        # BPE: ``bpe_train`` learns that many merges (operators/bpe.py — ONE
+        # word-count shuffle, then the driver merge loop over the Heaps'-
+        # bounded frequency table; bpe_merges/ is the shippable tokenizer);
+        # ``n_bpe_subwords`` is each turn's model-token count under it, the
+        # number token-budget packing and cost accounting run on (JVM
+        # pre-tokenization + one Arrow crossing returning just the count).
+        _Stage(
+            "bpe",
+            _stage_mode(bpe_merges_path, bpe_train and f"train:{int(bpe_train)}"),
+            columns=("n_bpe_subwords",),
+            project=lambda df, merges: df.withColumn(
+                "n_bpe_subwords", _bpe.bpe_subword_count_col(merges, "text")
+            ),
+            path=bpe_merges_path,
+            load=lambda p: _bpe.load_merges(spark, p),
+            sidecar=os.path.join(output_dir, "bpe_merges"),
+            fit=lambda: _bpe.merges_to_df(
+                spark,
+                _bpe.train_bpe(
+                    _bpe.bpe_word_counts(src, "text", min_count=2, top_words=50_000),
+                    n_merges=int(bpe_train),
+                ),
+            ),
+        ),
+        # Quality classifier: ``clf_train`` distills the rule layer — the
+        # frozen spec's keep labels train a hashed-n-gram logistic
+        # regression for that many epochs (operators/classifier.py — one
+        # B-bounded shuffle per epoch, exact decimal gradients); ``clf_score``
+        # is the keep-probability under it, a sigmoid over a weight literal.
+        _Stage(
+            "clf",
+            _stage_mode(clf_model_path, clf_train and f"train:{int(clf_train)}"),
+            columns=("clf_score",),
+            project=lambda df, m: df.withColumn("clf_score", _clf.classifier_score_col("text", m)),
+            path=clf_model_path,
+            load=lambda p: _clf.model_from_df(spark.read.parquet(p)),
+            sidecar=os.path.join(output_dir, "clf_model"),
+            fit=lambda: _clf.model_to_df(
+                spark, _clf.fit_quality_classifier(distill("keep"), epochs=int(clf_train))
+            ),
+        ),
+        # Learned langid: ``langid_train`` distills the frozen heuristic's
+        # ``lang`` labels into the fastText-style hashed char+word n-gram
+        # softmax (operators/langid_model.py — one bounded shuffle per
+        # epoch, exact decimal gradients). ``ft_lang``/``ft_lang_prob`` ride
+        # NEXT to the frozen ``lang``, which stays byte-identical: the
+        # learned model occupies the swap seam without touching keep/drop.
+        # The synthetic teacher labels here exercise the plumbing; a model
+        # fitted on a genuinely multilingual corpus loads via the path.
+        _Stage(
+            "langid",
+            _stage_mode(langid_model_path, langid_train and f"train:{int(langid_train)}"),
+            columns=("ft_lang", "ft_lang_prob"),
+            project=lambda df, m: _lm.langid_scored(df, m, "text"),
+            path=langid_model_path,
+            load=lambda p: _lm.langid_model_from_df(spark.read.parquet(p)),
+            sidecar=os.path.join(output_dir, "langid_model"),
+            fit=lambda: _lm.langid_model_to_df(
+                spark,
+                _lm.fit_langid_model(distill("lang"), label_col="lang", epochs=int(langid_train)),
+            ),
+        ),
+    ]
+    on = [st for st in stages if st.mode != "none"]
+    substr_bloom: dict | None = None
+    if substr_bloom_history:
+        substr_bloom = _dedup.load_bloom(substr_bloom_history)
+        if substr_bloom.get("grain") != "window":
+            raise ValueError(
+                f"--substr-bloom-history needs a window-grain artifact "
+                f"(build_window_bloom), got grain="
+                f"{substr_bloom.get('grain', 'fingerprint')!r} from "
+                f"{substr_bloom_history}"
+            )
 
     # Stage the input ONCE, partitioned by bucket, so every wave (and every
     # resume) prunes to its bucket directories at the scan. The previous
@@ -399,15 +580,24 @@ def run_pipeline(
     # run must not silently read stale data staged from a different input
     # or with a different bucket modulus, and resume=False always restages.
     staging_meta = {"input_path": _input_key(input_path), "n_buckets": n_buckets}
-    meta_path = os.path.join(staged_path, "_staging_meta.json")
-    reuse = resume and os.path.exists(os.path.join(staged_path, "_SUCCESS"))
-    if reuse:
-        try:
-            with open(meta_path) as fh:
-                reuse = json.load(fh) == staging_meta
-        except (OSError, ValueError):
-            reuse = False
-    if not reuse:
+    if not (resume and _fresh(staged_path, "_staging_meta.json", staging_meta)):
+        # Restaging means the prior run's work does not apply (different
+        # input, different modulus, or an explicit fresh run) — clear ALL
+        # prior outputs first. Stale lineage would mark buckets done and
+        # return the old outputs wholesale; stale decisions/metrics/
+        # conversations partitions would survive dynamic overwrite wherever
+        # the new input puts zero rows in a bucket the old input populated;
+        # a fitted sidecar's reuse gate records only its mode, so it would
+        # serve an artifact fitted on the OLD corpus.
+        for stale in (
+            lineage_path,
+            decisions_path,
+            metrics_path,
+            dup_convs_path,
+            conversations_path,
+            *(st.sidecar for st in stages if st.sidecar),
+        ):
+            shutil.rmtree(stale, ignore_errors=True)
         (
             read_input(spark, input_path)
             .withColumn("bucket", _bucket_col(n_buckets))
@@ -416,33 +606,8 @@ def run_pipeline(
             .partitionBy("bucket")
             .parquet(staged_path)
         )
-        with open(meta_path, "w") as fh:
+        with open(os.path.join(staged_path, "_staging_meta.json"), "w") as fh:
             json.dump(staging_meta, fh)
-        # Restaging means the prior run's work does not apply (different
-        # input, different modulus, or an explicit fresh run) — clear ALL
-        # prior outputs. Stale lineage would mark buckets done and return
-        # the old outputs wholesale; stale decisions/metrics partitions
-        # would survive dynamic overwrite wherever the new input happens to
-        # put zero rows in a bucket the old input populated.
-        import shutil
-
-        for stale in (
-            lineage_path,
-            decisions_path,
-            metrics_path,
-            dup_convs_path,
-            os.path.join(output_dir, "dsir_ratio"),
-            # every trained-on-this-staging sidecar: their reuse gates
-            # record only the MODE, so after an input change they would
-            # match and serve artifacts fitted on the OLD corpus
-            os.path.join(output_dir, "bpe_merges"),
-            os.path.join(output_dir, "clf_model"),
-            os.path.join(output_dir, "langid_model"),
-            # conversations/ rollup partitions from the old input survive
-            # dynamic overwrite wherever the new input leaves a bucket empty
-            os.path.join(output_dir, "conversations"),
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
     src = spark.read.parquet(staged_path)
 
     dedup_mode = (
@@ -461,15 +626,9 @@ def run_pipeline(
         "conv_id string, canonical_conv_id string, fp string, "
         "group_size long, method string, bucket int"
     )
-    dup_meta_path = os.path.join(dup_convs_path, "_dedup_meta.json")
-    dup_reuse = os.path.exists(os.path.join(dup_convs_path, "_SUCCESS"))
-    if dup_reuse:
-        try:
-            with open(dup_meta_path) as fh:
-                dup_reuse = json.load(fh) == {"mode": dedup_mode}
-        except (OSError, ValueError):
-            dup_reuse = False
-    if dedup_mode != "none" and not dup_reuse:
+    if dedup_mode != "none" and not _fresh(
+        dup_convs_path, "_dedup_meta.json", {"mode": dedup_mode}
+    ):
         # ONE corpus-wide pass per staging+mode. Exact leg: conversation
         # rollup (single shuffle on conv_id, map-side partial collect_list)
         # + group stats as window aggregates over fp (one shuffle on a
@@ -483,17 +642,12 @@ def run_pipeline(
         # function), so the sidecar partitions align with the staged input
         # and each wave reads only its own directories.
         from piperider_spark.functions.text import fingerprint
-        from piperider_spark.operators.dedup import (
-            connected_components,
-            conversation_near_dup_pairs,
-            conversation_text,
-        )
 
         legs = []
         # the conversation rollup (one shuffle on conv_id) is shared by the
         # exact and bloom legs; persist only when both consume it
         rolled = (
-            conversation_text(src, sep="\x1e") if (conv_dedup or bloom_history) else None
+            _dedup.conversation_text(src, sep="\x1e") if (conv_dedup or bloom_history) else None
         )
         if conv_dedup and bloom_history:
             rolled = rolled.persist()
@@ -521,10 +675,10 @@ def run_pipeline(
                 )
             )
         if conv_near_dedup:
-            pairs = conversation_near_dup_pairs(
+            pairs = _dedup.conversation_near_dup_pairs(
                 src, threshold=conv_near_threshold
             )
-            clusters = connected_components(pairs, id_a="id_a", id_b="id_b")
+            clusters = _dedup.connected_components(pairs, id_a="id_a", id_b="id_b")
             sizes = clusters.groupBy("cluster_id").agg(
                 F.count(F.lit(1)).alias("group_size")
             )
@@ -545,11 +699,10 @@ def run_pipeline(
             # conv rollup shuffle, ZERO shuffle against the archive).
             # canonical_conv_id is NULL: the keeper lives in a previous
             # epoch's output. group_size NULL likewise (unknown here).
-            from piperider_spark.operators.dedup import bloom_seen_flags, load_bloom
-
-            hist_bloom = load_bloom(bloom_history)
             legs.append(
-                bloom_seen_flags(rolled, hist_bloom, text_col="conv_text")
+                _dedup.bloom_seen_flags(
+                    rolled, _dedup.load_bloom(bloom_history), text_col="conv_text"
+                )
                 .where(F.col("maybe_seen"))
                 .select(
                     "conv_id",
@@ -569,310 +722,72 @@ def run_pipeline(
             .partitionBy("bucket")
             .parquet(dup_convs_path)
         )
-        with open(dup_meta_path, "w") as fh:
+        with open(os.path.join(dup_convs_path, "_dedup_meta.json"), "w") as fh:
             json.dump({"mode": dedup_mode}, fh)
         if conv_dedup and bloom_history:
             rolled.unpersist()
 
-    if dsir_ratio_path:
-        dsir_mode = f"path:{_artifact_key(dsir_ratio_path)}:{dsir_buckets}"
-    elif dsir_fit:
-        dsir_mode = f"fit:{dsir_fit}:{dsir_buckets}"
-    else:
-        dsir_mode = "none"
-    dsir_arr: list[float] | None = None
-    if dsir_mode != "none":
-        from piperider_spark.operators import dsir as _dsir
-
-        if dsir_ratio_path:
-            ratio_src = dsir_ratio_path
-        else:
-            # fit ONCE per staging+predicate; the B-bounded log-ratio table
-            # is written as an audit record (same sidecar contract as
-            # dup_convs: meta manifest + reuse gated on the mode string)
-            ratio_src = os.path.join(output_dir, "dsir_ratio")
-            ratio_meta_path = os.path.join(ratio_src, "_dsir_meta.json")
-            ratio_reuse = os.path.exists(os.path.join(ratio_src, "_SUCCESS"))
-            if ratio_reuse:
-                try:
-                    with open(ratio_meta_path) as fh:
-                        ratio_reuse = json.load(fh) == {"mode": dsir_mode}
-                except (OSError, ValueError):
-                    ratio_reuse = False
-            if not ratio_reuse:
-                (
-                    _dsir.fit_bucket_log_ratio(
-                        src,
-                        src.where(F.expr(dsir_fit)),
-                        text_col="text",
-                        n_buckets=dsir_buckets,
-                    )
-                    .coalesce(1)  # ≤ dsir_buckets rows — one tiny file
-                    .write.mode("overwrite")
-                    .parquet(ratio_src)
-                )
-                with open(ratio_meta_path, "w") as fh:
-                    json.dump({"mode": dsir_mode}, fh)
-        # bounded collect (≤ dsir_buckets rows) → one array literal shared
-        # by every wave's zero-shuffle scoring projection
-        dsir_arr = _dsir.log_ratio_array(
-            spark.read.parquet(ratio_src), n_buckets=dsir_buckets
-        )
-
-    if bpe_merges_path:
-        bpe_mode = f"path:{_artifact_key(bpe_merges_path)}"
-    elif bpe_train:
-        bpe_mode = f"train:{int(bpe_train)}"
-    else:
-        bpe_mode = "none"
-    bpe_merges: list[tuple[str, str]] | None = None
-    if bpe_mode != "none":
-        from piperider_spark.operators import bpe as _bpe
-
-        if bpe_merges_path:
-            merges_src = bpe_merges_path
-        else:
-            # fit ONCE per staging (the same sidecar contract as dsir_ratio:
-            # meta manifest, reuse gated on the mode string); the artifact
-            # (rank, left, right, merged) is the shippable tokenizer
-            merges_src = os.path.join(output_dir, "bpe_merges")
-            merges_meta_path = os.path.join(merges_src, "_bpe_meta.json")
-            merges_reuse = os.path.exists(os.path.join(merges_src, "_SUCCESS"))
-            if merges_reuse:
-                try:
-                    with open(merges_meta_path) as fh:
-                        merges_reuse = json.load(fh) == {"mode": bpe_mode}
-                except (OSError, ValueError):
-                    merges_reuse = False
-            if not merges_reuse:
-                fitted = _bpe.train_bpe(
-                    _bpe.bpe_word_counts(
-                        src, "text", min_count=2, top_words=50_000
-                    ),
-                    n_merges=int(bpe_train),
-                )
-                (
-                    _bpe.merges_to_df(spark, fitted)
-                    .coalesce(1)  # ≤ n_merges rows — one tiny file
-                    .write.mode("overwrite")
-                    .parquet(merges_src)
-                )
-                with open(merges_meta_path, "w") as fh:
-                    json.dump({"mode": bpe_mode}, fh)
-        bpe_merges = _bpe.load_merges(spark, merges_src)
-
-    if clf_model_path:
-        clf_mode = f"path:{_artifact_key(clf_model_path)}"
-    elif clf_train:
-        clf_mode = f"train:{int(clf_train)}"
-    else:
-        clf_mode = "none"
-    clf_model: dict | None = None
-    if clf_mode != "none":
-        from piperider_spark.operators import classifier as _clf
-
-        if clf_model_path:
-            model_src = clf_model_path
-        else:
-            # self-distillation, fit ONCE per staging: the frozen spec's
-            # keep labels (one build_decisions pass) train the classifier;
-            # sidecar contract identical to dsir_ratio/bpe_merges
-            model_src = os.path.join(output_dir, "clf_model")
-            clf_meta_path = os.path.join(model_src, "_clf_meta.json")
-            clf_reuse = os.path.exists(os.path.join(model_src, "_SUCCESS"))
-            if clf_reuse:
-                try:
-                    with open(clf_meta_path) as fh:
-                        clf_reuse = json.load(fh) == {"mode": clf_mode}
-                except (OSError, ValueError):
-                    clf_reuse = False
-            if not clf_reuse:
-                labeled = build_decisions(src, spec).select("text", "keep")
-                fitted = _clf.fit_quality_classifier(
-                    labeled, epochs=int(clf_train)
-                )
-                (
-                    _clf.model_to_df(spark, fitted)
-                    .coalesce(1)  # ≤ n_buckets+1 rows — one tiny file
-                    .write.mode("overwrite")
-                    .parquet(model_src)
-                )
-                with open(clf_meta_path, "w") as fh:
-                    json.dump({"mode": clf_mode}, fh)
-        clf_model = _clf.model_from_df(spark.read.parquet(model_src))
-
-    if langid_model_path:
-        langid_mode = f"path:{_artifact_key(langid_model_path)}"
-    elif langid_train:
-        langid_mode = f"train:{int(langid_train)}"
-    else:
-        langid_mode = "none"
-    langid_model: dict | None = None
-    if langid_mode != "none":
-        from piperider_spark.operators import langid_model as _lm
-
-        if langid_model_path:
-            lm_src = langid_model_path
-        else:
-            # distill the frozen heuristic's lang labels, fit ONCE per
-            # staging — sidecar contract identical to clf_model
-            lm_src = os.path.join(output_dir, "langid_model")
-            lm_meta_path = os.path.join(lm_src, "_langid_meta.json")
-            lm_reuse = os.path.exists(os.path.join(lm_src, "_SUCCESS"))
-            if lm_reuse:
-                try:
-                    with open(lm_meta_path) as fh:
-                        lm_reuse = json.load(fh) == {"mode": langid_mode}
-                except (OSError, ValueError):
-                    lm_reuse = False
-            if not lm_reuse:
-                labeled = build_decisions(src, spec).select("text", "lang")
-                fitted = _lm.fit_langid_model(
-                    labeled, label_col="lang", epochs=int(langid_train)
-                )
-                (
-                    _lm.langid_model_to_df(spark, fitted)
-                    .coalesce(1)  # K×(n_buckets+1) rows — one tiny file
-                    .write.mode("overwrite")
-                    .parquet(lm_src)
-                )
-                with open(lm_meta_path, "w") as fh:
-                    json.dump({"mode": langid_mode}, fh)
-        langid_model = _lm.langid_model_from_df(spark.read.parquet(lm_src))
-
-    substr_mode = (
-        f"bloom:{_artifact_key(substr_bloom_history)}" if substr_bloom_history else "none"
-    )
-    substr_bloom: dict | None = None
-    if substr_bloom_history:
-        from piperider_spark.operators.dedup import load_bloom as _load_bloom
-
-        substr_bloom = _load_bloom(substr_bloom_history)
-        if substr_bloom.get("grain") != "window":
-            raise ValueError(
-                f"--substr-bloom-history needs a window-grain artifact "
-                f"(build_window_bloom), got grain="
-                f"{substr_bloom.get('grain', 'fingerprint')!r} from "
-                f"{substr_bloom_history}"
-            )
-
-    # ONE broadcast of the (potentially GB-scale) bitset for the whole
-    # run — window_seen_stats would otherwise re-broadcast it every wave
-    substr_bits_bc = (
-        spark.sparkContext.broadcast(substr_bloom["bits"]) if substr_bloom else None
-    )
+    # Fit (once per staging) or load each enabled stage's artifact.
+    artifacts = {}
+    try:
+        for st in on:
+            artifacts[st.key] = _fit_or_load(st)
+    finally:
+        for df in labels:
+            df.unpersist()
 
     spec_sig = _spec_sig(spec)
     done: set[int] = set()
     if resume and os.path.isdir(lineage_path):
         try:
-            # mergeSchema: lineage written before the conv_rollup column
-            # existed must still read (missing column ⇒ null ⇒ no rollup)
+            # mergeSchema: lineage written before a column existed still
+            # reads (the column is null there; _lineage_col defaults it)
             lin = spark.read.option("mergeSchema", "true").parquet(lineage_path)
-
-            def _flag(name: str) -> F.Column:
-                # lineage written before a column existed reads as absent /
-                # null under mergeSchema — treat as "flag was off"
-                if name in lin.columns:
-                    return F.coalesce(F.col(name), F.lit(False))
-                return F.lit(False)
-
-            ts_col = (
-                F.coalesce(F.col("ts"), F.lit(0.0))
-                if "ts" in lin.columns
-                else F.lit(0.0)
-            )
             if "dedup_mode" in lin.columns:
-                mode_col = F.coalesce(F.col("dedup_mode"), F.lit("none"))
-            elif "conv_dedup" in lin.columns:  # pre-mode lineage: boolean flag
-                mode_col = F.when(_flag("conv_dedup"), F.lit("exact")).otherwise(
-                    F.lit("none")
+                dedup_col = _lineage_col(lin, "dedup_mode", "none")
+            else:  # pre-mode lineage: a boolean exact-dedup flag
+                dedup_col = F.when(_lineage_col(lin, "conv_dedup", False), "exact").otherwise(
+                    "none"
                 )
-            else:
-                mode_col = F.lit("none")
             # Judge each bucket by its LATEST lineage row only: lineage is
             # append-only, so after a mode flip (e.g. dedup on → off → on)
             # BOTH mode values exist for a bucket, but decisions/ holds
             # only the most recent processing's content. A bucket is done
-            # iff that latest processing used the same dedup mode (dedup
-            # changes decision rows themselves) and, when conv_rollup is
-            # requested, also produced the rollup output.
-            dsir_col = (
-                F.coalesce(F.col("dsir_mode"), F.lit("none"))
-                if "dsir_mode" in lin.columns
-                else F.lit("none")
-            )
-            substr_col = (
-                F.coalesce(F.col("substr_mode"), F.lit("none"))
-                if "substr_mode" in lin.columns
-                else F.lit("none")
-            )
-            bpe_col = (
-                F.coalesce(F.col("bpe_mode"), F.lit("none"))
-                if "bpe_mode" in lin.columns
-                else F.lit("none")
-            )
-            clf_col = (
-                F.coalesce(F.col("clf_mode"), F.lit("none"))
-                if "clf_mode" in lin.columns
-                else F.lit("none")
-            )
-            langid_col = (
-                F.coalesce(F.col("langid_mode"), F.lit("none"))
-                if "langid_mode" in lin.columns
-                else F.lit("none")
-            )
-            # lineage written before these columns existed reads as the
-            # defaults it was produced under (DEFAULT_SPEC / 0.5) — the
-            # same back-compat rule as the mode columns
-            spec_col = (
-                F.coalesce(F.col("spec_sig"), F.lit(_spec_sig(DEFAULT_SPEC)))
-                if "spec_sig" in lin.columns
-                else F.lit(_spec_sig(DEFAULT_SPEC))
-            )
-            frac_col = (
-                F.coalesce(F.col("rollup_frac"), F.lit(0.5))
-                if "rollup_frac" in lin.columns
-                else F.lit(0.5)
-            )
+            # iff that latest processing used the same modes and rule
+            # thresholds (lineage from before spec_sig existed ran under
+            # DEFAULT_SPEC) and, when conv_rollup is requested, produced the
+            # rollup output at the same threshold.
             last = lin.groupBy("bucket").agg(
                 F.max_by(
                     F.struct(
-                        _flag("conv_rollup").alias("r"),
-                        mode_col.alias("m"),
-                        dsir_col.alias("d"),
-                        substr_col.alias("sb"),
-                        bpe_col.alias("bp"),
-                        clf_col.alias("cl"),
-                        langid_col.alias("li"),
-                        spec_col.alias("sp"),
-                        frac_col.alias("rf"),
+                        _lineage_col(lin, "conv_rollup", False).alias("rollup"),
+                        _lineage_col(lin, "rollup_frac", 0.5).alias("rollup_frac"),
+                        _lineage_col(lin, "spec_sig", _spec_sig(DEFAULT_SPEC)).alias("spec"),
+                        dedup_col.alias("dedup"),
+                        *(
+                            _lineage_col(lin, f"{st.key}_mode", "none").alias(st.key)
+                            for st in stages
+                        ),
                     ),
-                    ts_col,
+                    _lineage_col(lin, "ts", 0.0),
                 ).alias("s")
             )
-            ok = (
-                (F.col("s.m") == F.lit(dedup_mode))
-                & (F.col("s.d") == F.lit(dsir_mode))
-                & (F.col("s.sb") == F.lit(substr_mode))
-                & (F.col("s.bp") == F.lit(bpe_mode))
-                & (F.col("s.cl") == F.lit(clf_mode))
-                & (F.col("s.li") == F.lit(langid_mode))
-                # decisions depend on the rule thresholds themselves: a
-                # changed RuleSpec must reprocess every bucket
-                & (F.col("s.sp") == F.lit(spec_sig))
-                & (F.col("s.r") | F.lit(not conv_rollup))
-                # the rollup threshold shapes conversations/ content; only
-                # binding when the rollup is requested
-                & ((F.col("s.rf") == F.lit(float(conv_min_keep_frac))) | F.lit(not conv_rollup))
-            )
+            ok = (F.col("s.spec") == spec_sig) & (F.col("s.dedup") == dedup_mode)
+            for st in stages:
+                ok &= F.col(f"s.{st.key}") == st.mode
+            if conv_rollup:
+                ok &= F.col("s.rollup") & (F.col("s.rollup_frac") == float(conv_min_keep_frac))
             done = {r["bucket"] for r in last.where(ok).collect()}
         except Exception:
             done = set()
 
     todo = [b for b in range(n_buckets) if b not in done]
     processed = 0
-    conversations_path = os.path.join(output_dir, "conversations")
+    out_cols = [
+        "bucket", "conv_id", "turn_idx", "role", "ts",
+        "keep", "reasons", "lang", "ppl", "text_scrubbed",
+        *(c for st in on for c in st.columns),
+    ]
 
     def write_metrics(read_back: DataFrame) -> None:
         # per-bucket metrics: PipeRider's run.json per partition (SURVEY
@@ -946,6 +861,7 @@ def run_pipeline(
 
         # Lineage from a driver-side Arrow table: a LocalTableScan, so no
         # Python worker starts to store a handful of rows; one file per wave.
+        # Columns in LINEAGE_SCHEMA order.
         import pyarrow as pa
 
         elapsed = int((time.time() - t0) * 1000)
@@ -957,11 +873,7 @@ def run_pipeline(
                 "elapsed_ms": pa.array([elapsed] * n, pa.int64()),
                 "conv_rollup": [bool(conv_rollup)] * n,
                 "dedup_mode": [dedup_mode] * n,
-                "dsir_mode": [dsir_mode] * n,
-                "substr_mode": [substr_mode] * n,
-                "bpe_mode": [bpe_mode] * n,
-                "clf_mode": [clf_mode] * n,
-                "langid_mode": [langid_mode] * n,
+                **{f"{st.key}_mode": [st.mode] * n for st in stages},
                 "spec_sig": [spec_sig] * n,
                 "rollup_frac": [float(conv_min_keep_frac)] * n,
                 "ts": [time.time()] * n,
@@ -987,8 +899,8 @@ def run_pipeline(
     # other's SQL execution id.
     pending = None  # the previous wave's finish_wave future
     with ThreadPoolExecutor(max_workers=2, thread_name_prefix="wave-writer") as pool:
-        for w in range(0, len(todo), max(wave_buckets, 1)):
-            wave = todo[w : w + max(wave_buckets, 1)]
+        for w in range(0, len(todo), wave_buckets):
+            wave = todo[w : w + wave_buckets]
             t0 = time.time()
             # partition-column predicate → directory pruning at the scan
             part = src.where(F.col("bucket").isin(wave))
@@ -1005,53 +917,8 @@ def run_pipeline(
                 # buckets; no broadcast hint — the dup list is usually tiny
                 # (AQE broadcasts it) but is corpus-shaped in the worst case
                 part = part.join(dup_wave, "conv_id", "left_anti")
-            if dsir_arr is not None:
-                # zero-shuffle projection: the fitted table rides the plan as
-                # one array literal (dsir.dsir_score_col), no per-wave joins
-                from piperider_spark.operators.dsir import dsir_score_col
-
-                part = part.withColumn("dsir_score", dsir_score_col("text", dsir_arr))
-            if substr_bloom is not None:
-                # zero-shuffle projection: row-local window hashes + broadcast
-                # bitset probe (operators/dedup.window_seen_stats), no join
-                # against the archive
-                from piperider_spark.operators.dedup import window_seen_stats
-
-                part = (
-                    window_seen_stats(
-                        part,
-                        substr_bloom,
-                        k_tokens=int(substr_bloom["k_tokens"]),
-                        bits_bc=substr_bits_bc,
-                    )
-                    .withColumnRenamed("seen_frac", "substr_seen_frac")
-                    .drop("n_tokens", "seen_windows", "seen_token_cov")
-                )
-            if bpe_merges is not None:
-                # zero-shuffle projection: JVM pre-tokenize + one Arrow crossing
-                # returning only the count (operators/bpe.bpe_subword_count_col)
-                # — the frozen tokenizer rides every wave's plan, no joins
-                from piperider_spark.operators.bpe import bpe_subword_count_col
-
-                part = part.withColumn(
-                    "n_bpe_subwords", bpe_subword_count_col(bpe_merges, "text")
-                )
-            if clf_model is not None:
-                # zero-shuffle projection: weight-array-literal sigmoid fold
-                # (operators/classifier.classifier_score_col), no joins
-                from piperider_spark.operators.classifier import classifier_score_col
-
-                part = part.withColumn(
-                    "clf_score", classifier_score_col("text", clf_model)
-                )
-            if langid_model is not None:
-                # zero-shuffle projection: staged prefix → gram buckets →
-                # one margins fold (operators/langid_model.langid_scored);
-                # the frozen `lang` column is untouched — ft_lang rides NEXT
-                # to it (the documented swap seam, observed before cut over)
-                from piperider_spark.operators.langid_model import langid_scored
-
-                part = langid_scored(part, langid_model, "text")
+            for st in on:
+                part = st.project(part, artifacts[st.key])
             # Make dynamic overwrite EXACT for reprocessed buckets: a mode-flip
             # reprocess that yields ZERO rows for a bucket writes no partition
             # at all, and dynamic overwrite would leave the previous
@@ -1060,33 +927,15 @@ def run_pipeline(
             # in `todo` — i.e. NOT committed under the current modes — so
             # purging its partitions is safe; a crash before the lineage append
             # leaves the bucket not-done and it reprocesses.
-            import shutil as _sh
-
             for _base in (decisions_path, metrics_path, conversations_path):
                 for _b in wave:
-                    _sh.rmtree(os.path.join(_base, f"bucket={_b}"), ignore_errors=True)
+                    shutil.rmtree(os.path.join(_base, f"bucket={_b}"), ignore_errors=True)
 
             # No cache: the decisions write is the ONLY consumer of `decided`, so
             # the fused signals/scrub UDF and the lag-window shuffle run once per
             # row, and AQE may coalesce the post-window stage (it cannot inside
             # a cached plan).
-            decided = build_decisions(part, spec)
-
-            out_cols = [
-                "bucket", "conv_id", "turn_idx", "role", "ts",
-                "keep", "reasons", "lang", "ppl", "text_scrubbed",
-            ]
-            if dsir_arr is not None:
-                out_cols.append("dsir_score")
-            if substr_bloom is not None:
-                out_cols.append("substr_seen_frac")
-            if bpe_merges is not None:
-                out_cols.append("n_bpe_subwords")
-            if clf_model is not None:
-                out_cols.append("clf_score")
-            if langid_model is not None:
-                out_cols.extend(["ft_lang", "ft_lang_prob"])
-            out = decided.select(*out_cols)
+            out = build_decisions(part, spec).select(*out_cols)
             (
                 out.repartition("bucket")
                 .sortWithinPartitions("conv_id", "turn_idx")  # stable north-rule ordering
@@ -1112,49 +961,28 @@ def run_pipeline(
         if pending is not None:
             pending.result()
 
+    # The next epochs' Bloom snapshots: conversation fingerprints (the
+    # bloom_history grain) and turn windows (the substr stage's grain, whose
+    # k_tokens epoch 1 sets and later epochs inherit).
     if bloom_out:
-        # next epoch's snapshot: history ∪ this corpus' conversation
-        # fingerprints, in the history's bitset layout (first epoch sets
-        # the layout; size it for the archive's growth horizon). Derived
-        # from staged input + the history artifact only — idempotent, so
-        # a resumed/no-op run rewrites the same content (atomic rename).
-        from piperider_spark.operators.dedup import (
-            bloom_or,
-            build_fingerprint_bloom,
-            load_bloom,
-            save_bloom,
+        _save_epoch_bloom(
+            bloom_out,
+            _dedup.load_bloom(bloom_history) if bloom_history else None,
+            bloom_expected,
+            partial(
+                _dedup.build_fingerprint_bloom,
+                _dedup.conversation_text(src, sep="\x1e"),
+                text_col="conv_text",
+            ),
         )
-        from piperider_spark.operators.dedup import conversation_text as _conv_text
-
-        hist = load_bloom(bloom_history) if bloom_history else None
-        cur = build_fingerprint_bloom(
-            _conv_text(src, sep="\x1e"),
-            text_col="conv_text",
-            expected=None if hist else bloom_expected,
-            fpp=hist["fpp"] if hist else 0.01,
-            layout=(hist["m_bits"], hist["k"]) if hist else None,
-        )
-        save_bloom(bloom_or(hist, cur) if hist else cur, bloom_out)
-
     if substr_bloom_out:
-        # window-grain epoch snapshot: history ∪ this corpus' turn windows
-        # (same idempotent derived-from-staged contract as bloom_out);
-        # epoch 1 sets k_tokens + layout, later epochs inherit both
-        from piperider_spark.operators.dedup import (
-            bloom_or as _wb_or,
-            build_window_bloom as _wb_build,
-            save_bloom as _wb_save,
+        k_tokens = int(substr_bloom["k_tokens"]) if substr_bloom else substr_bloom_k
+        _save_epoch_bloom(
+            substr_bloom_out,
+            substr_bloom,
+            substr_bloom_expected,
+            partial(_dedup.build_window_bloom, src, k_tokens=k_tokens),
         )
-
-        wh = substr_bloom  # already loaded + grain-checked above
-        cur_w = _wb_build(
-            src,
-            k_tokens=int(wh["k_tokens"]) if wh else substr_bloom_k,
-            expected=None if wh else substr_bloom_expected,
-            fpp=wh["fpp"] if wh else 0.01,
-            layout=(wh["m_bits"], wh["k"]) if wh else None,
-        )
-        _wb_save(_wb_or(wh, cur_w) if wh else cur_w, substr_bloom_out)
 
     return PipelineResult(
         run_id=run_id,
@@ -1167,21 +995,25 @@ def run_pipeline(
     )
 
 
-def main() -> None:  # pragma: no cover — spark-submit entry
-    import argparse
-
-    from piperider_spark.session import get_spark
-
-    p = argparse.ArgumentParser(description="transcript quality-filter pipeline")
+def add_pipeline_args(p: argparse.ArgumentParser) -> argparse.ArgumentParser:
+    """Declare the filter job's flags on ``p``: the one declaration behind
+    ``python -m piperider_spark.pipeline`` and ``piperider_spark.cli
+    filter``. Each flag's dest is the ``run_pipeline`` parameter it sets,
+    and a flag not given stays out of the parsed namespace, so
+    ``run_pipeline(spark, **vars(args))`` applies the function's own
+    defaults."""
+    p.argument_default = argparse.SUPPRESS
     p.add_argument(
         "--input",
+        dest="input_path",
+        metavar="INPUT",
         required=True,
         help="parquet path/dir, or table:<catalog identifier> "
         "(an Iceberg table when an Iceberg catalog is configured)",
     )
-    p.add_argument("--output", required=True)
-    p.add_argument("--buckets", type=int, default=16)
-    p.add_argument("--no-resume", action="store_true")
+    p.add_argument("--output", dest="output_dir", metavar="OUTPUT", required=True)
+    p.add_argument("--buckets", dest="n_buckets", metavar="BUCKETS", type=int)
+    p.add_argument("--no-resume", dest="resume", action="store_false")
     p.add_argument(
         "--conv-rollup",
         action="store_true",
@@ -1190,14 +1022,12 @@ def main() -> None:  # pragma: no cover — spark-submit entry
     p.add_argument(
         "--conv-min-keep-frac",
         type=float,
-        default=0.5,
         help="kept-turn fraction a conversation needs for conv_keep "
         "(with --conv-rollup; default 0.5)",
     )
     p.add_argument(
         "--wave-buckets",
         type=int,
-        default=8,
         help="buckets per wave job (default 8); a crash can lose up to two "
         "waves: one wave's decisions plus the previous wave's pending "
         "aggregates",
@@ -1214,30 +1044,26 @@ def main() -> None:  # pragma: no cover — spark-submit entry
         help="also drop NEAR-duplicate conversations (MinHash-LSH + "
         "connected components at --conv-near-threshold Jaccard)",
     )
-    p.add_argument("--conv-near-threshold", type=float, default=0.85)
+    p.add_argument("--conv-near-threshold", type=float)
     p.add_argument(
         "--bloom-history",
-        default=None,
         help="Bloom snapshot of previous epochs' conversation fingerprints "
         "(save_bloom artifact): seen conversations are dropped map-side — "
         "cross-run dedup with zero shuffle against the archive",
     )
     p.add_argument(
         "--bloom-out",
-        default=None,
         help="write the next epoch's snapshot (history ∪ this corpus) here "
         "after the waves complete",
     )
     p.add_argument(
         "--bloom-expected",
         type=int,
-        default=None,
         help="first-epoch bitset sizing: expected TOTAL conversations over "
         "the archive's growth horizon (later epochs inherit the layout)",
     )
     p.add_argument(
         "--dsir-fit",
-        default=None,
         metavar="PREDICATE",
         help="SQL predicate selecting the DSIR target slice (e.g. "
         "\"role = 'assistant'\"); fits once per staging and adds a "
@@ -1245,14 +1071,12 @@ def main() -> None:  # pragma: no cover — spark-submit entry
     )
     p.add_argument(
         "--dsir-ratio-path",
-        default=None,
         help="externally fitted (bucket, log_ratio) parquet — score with "
         "it instead of fitting in-run",
     )
-    p.add_argument("--dsir-buckets", type=int, default=4096)
+    p.add_argument("--dsir-buckets", type=int)
     p.add_argument(
         "--substr-bloom-history",
-        default=None,
         help="WINDOW-grain Bloom snapshot (build_window_bloom artifact) of "
         "the archive's k-token windows: adds a substr_seen_frac column to "
         "decisions/ — per-turn fraction of tokens covered by substrings "
@@ -1260,27 +1084,25 @@ def main() -> None:  # pragma: no cover — spark-submit entry
     )
     p.add_argument(
         "--substr-bloom-out",
-        default=None,
         help="write the next epoch's window snapshot (history ∪ this "
         "corpus' turn windows) here after the waves complete",
     )
     p.add_argument(
         "--substr-bloom-expected",
         type=int,
-        default=None,
         help="first-epoch window-bitset sizing: expected TOTAL windows "
         "(~tokens) over the archive's growth horizon",
     )
     p.add_argument(
         "--substr-bloom-k",
         type=int,
-        default=8,
         help="window width in tokens for the FIRST epoch (later epochs "
         "inherit the artifact's k_tokens)",
     )
     p.add_argument(
         "--bpe-merges",
-        default=None,
+        dest="bpe_merges_path",
+        metavar="BPE_MERGES",
         help="path to a trained BPE merge-table artifact "
         "(operators/bpe.merges_to_df parquet): adds an n_bpe_subwords "
         "column to decisions/ — per-turn model-token count under the "
@@ -1289,7 +1111,6 @@ def main() -> None:  # pragma: no cover — spark-submit entry
     p.add_argument(
         "--bpe-train",
         type=int,
-        default=None,
         help="train a BPE tokenizer of this many merges ONCE per staging "
         "(word counts: one shuffle; merge loop: driver-side on the "
         "bounded frequency table), write it to <output>/bpe_merges, and "
@@ -1297,7 +1118,8 @@ def main() -> None:  # pragma: no cover — spark-submit entry
     )
     p.add_argument(
         "--clf-model",
-        default=None,
+        dest="clf_model_path",
+        metavar="CLF_MODEL",
         help="path to a trained quality-classifier artifact "
         "(operators/classifier.model_to_df parquet): adds a clf_score "
         "column to decisions/ — keep-probability under the learned "
@@ -1306,7 +1128,6 @@ def main() -> None:  # pragma: no cover — spark-submit entry
     p.add_argument(
         "--clf-train",
         type=int,
-        default=None,
         help="distill the rule layer ONCE per staging: the frozen spec's "
         "keep labels train a hashed-n-gram logistic regression for this "
         "many epochs (one B-bounded shuffle each), written to "
@@ -1314,7 +1135,8 @@ def main() -> None:  # pragma: no cover — spark-submit entry
     )
     p.add_argument(
         "--langid-model",
-        default=None,
+        dest="langid_model_path",
+        metavar="LANGID_MODEL",
         help="path to a trained learned-langid artifact "
         "(operators/langid_model.langid_model_to_df parquet): adds "
         "ft_lang / ft_lang_prob columns to decisions/ — the fastText-"
@@ -1324,44 +1146,20 @@ def main() -> None:  # pragma: no cover — spark-submit entry
     p.add_argument(
         "--langid-train",
         type=int,
-        default=None,
         help="distill the frozen langid heuristic ONCE per staging: its "
         "lang labels train the hashed char+word n-gram softmax for this "
         "many epochs (one bounded shuffle each), written to "
         "<output>/langid_model and scored as ft_lang / ft_lang_prob",
     )
-    args = p.parse_args()
+    return p
 
-    spark = get_spark("piperider_spark.pipeline")
-    res = run_pipeline(
-        spark,
-        args.input,
-        args.output,
-        n_buckets=args.buckets,
-        resume=not args.no_resume,
-        conv_rollup=args.conv_rollup,
-        conv_min_keep_frac=args.conv_min_keep_frac,
-        wave_buckets=args.wave_buckets,
-        conv_dedup=args.conv_dedup,
-        conv_near_dedup=args.conv_near_dedup,
-        conv_near_threshold=args.conv_near_threshold,
-        bloom_history=args.bloom_history,
-        bloom_out=args.bloom_out,
-        bloom_expected=args.bloom_expected,
-        dsir_fit=args.dsir_fit,
-        dsir_ratio_path=args.dsir_ratio_path,
-        dsir_buckets=args.dsir_buckets,
-        substr_bloom_history=args.substr_bloom_history,
-        substr_bloom_out=args.substr_bloom_out,
-        substr_bloom_expected=args.substr_bloom_expected,
-        substr_bloom_k=args.substr_bloom_k,
-        bpe_merges_path=args.bpe_merges,
-        bpe_train=args.bpe_train,
-        clf_model_path=args.clf_model,
-        clf_train=args.clf_train,
-        langid_model_path=args.langid_model,
-        langid_train=args.langid_train,
-    )
+
+def main(argv: list[str] | None = None) -> None:  # pragma: no cover — spark-submit entry
+    from piperider_spark.session import get_spark
+
+    p = argparse.ArgumentParser(description="transcript quality-filter pipeline")
+    args = add_pipeline_args(p).parse_args(argv)
+    res = run_pipeline(get_spark("piperider_spark.pipeline"), **vars(args))
     print(json.dumps(res.__dict__))
 
 

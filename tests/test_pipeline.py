@@ -1384,3 +1384,109 @@ def test_exact_dedup_sidecar_matches_groupby_join_and_scans_once(spark, transcri
         if f"{out}/staged]" in details[i]
     ]
     assert len(staged_scans) == 1, final
+
+
+def test_distillation_fits_share_one_labels_pass(spark, tmp_path, monkeypatch):
+    """With both clf_train and langid_train, the rule labels both fits
+    distill come from ONE build_decisions pass over staged/, persisted
+    only while the fits run."""
+    from piperider_spark import pipeline
+
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(generate_transcripts(600, seed=36), inp)
+    calls = []
+    real = pipeline.build_decisions
+
+    def counting(df, *args, **kwargs):
+        calls.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "build_decisions", counting)
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet()}
+
+    before = persisted()
+    r = run_pipeline(
+        spark, inp, str(tmp_path / "out"), n_buckets=2, wave_buckets=2,
+        clf_train=1, langid_train=1,
+    )
+    assert r.buckets_processed == 2
+    # one labels pass before the waves, then one per wave (here: one wave)
+    assert len(calls) == 2, len(calls)
+    assert persisted() == before, "the distillation labels stayed persisted"
+    cols = set(spark.read.parquet(r.decisions_path).columns)
+    assert {"clf_score", "ft_lang", "ft_lang_prob"} <= cols
+
+
+def test_wave_buckets_below_one_is_a_value_error(tmp_path):
+    """wave_buckets < 1 is rejected by name before anything is staged (no
+    session is even touched), like n_buckets."""
+    out = tmp_path / "out"
+    for bad in (0, -3):
+        with pytest.raises(ValueError, match=f"wave_buckets must be >= 1, got {bad}"):
+            run_pipeline(None, str(tmp_path / "missing.parquet"), str(out), wave_buckets=bad)
+    assert not out.exists()
+
+
+def test_cli_filter_accepts_the_pipeline_flags(spark, tmp_path):
+    """`cli filter` takes the flags of `python -m piperider_spark.pipeline`
+    (one declaration), so it can turn on dedup and the rollup."""
+    import os
+
+    from piperider_spark.cli import main as cli_main
+
+    pdf = generate_transcripts(600, seed=38)
+    src_conv = sorted(pdf["conv_id"].unique())[0]
+    clone = pdf[pdf["conv_id"] == src_conv].assign(conv_id=src_conv + "_copy")
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(pd.concat([pdf, clone], ignore_index=True), inp)
+    out = str(tmp_path / "out")
+    rc = cli_main(
+        ["filter", "--input", inp, "--output", out, "--buckets", "2",
+         "--conv-dedup", "--conv-rollup"]
+    )
+    assert rc == 0
+    assert os.path.isdir(f"{out}/conversations") and os.path.isdir(f"{out}/dup_convs")
+    dups = spark.read.parquet(f"{out}/dup_convs").select("conv_id", "canonical_conv_id").collect()
+    assert (src_conv + "_copy", src_conv) in [tuple(r) for r in dups]
+    met = spark.read.parquet(f"{out}/metrics").toPandas()
+    assert set(met["bucket"]) == {0, 1}
+
+
+def test_legacy_lineage_resumes_under_default_modes(spark, tmp_path):
+    """Lineage written before the mode, spec and threshold columns existed
+    (run_id, bucket, elapsed_ms, conv_rollup, ts and the boolean
+    conv_dedup) resumes as what it was produced under: the flag as exact
+    dedup, DEFAULT_SPEC's digest, and every stage mode "none" (a stage
+    turned on reprocesses; bpe stands in for any stage, as the dsir stage
+    takes minutes even on this input)."""
+    import pyarrow.parquet as pq
+
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(generate_transcripts(600, seed=37), inp)
+    out = str(tmp_path / "out")
+    r1 = run_pipeline(spark, inp, out, n_buckets=4, wave_buckets=2)
+    assert r1.buckets_processed == 4
+    legacy = (
+        pq.read_table(r1.lineage_path)
+        .select(["run_id", "bucket", "elapsed_ms", "conv_rollup", "ts"])
+        .to_pandas()
+        .assign(conv_dedup=True)
+    )
+
+    def rewrite_legacy() -> None:
+        # through Spark, as the old writer did: an outside rewrite would
+        # leave the session's cached listing of lineage/ stale
+        spark.createDataFrame(legacy).write.mode("overwrite").parquet(r1.lineage_path)
+
+    rewrite_legacy()
+    r2 = run_pipeline(spark, inp, out, n_buckets=4, wave_buckets=2, conv_dedup=True)
+    assert (r2.buckets_processed, r2.buckets_skipped) == (0, 4)
+    rewrite_legacy()
+    r3 = run_pipeline(spark, inp, out, n_buckets=4, wave_buckets=2)
+    assert (r3.buckets_processed, r3.buckets_skipped) == (4, 0)
+    rewrite_legacy()
+    r4 = run_pipeline(spark, inp, out, n_buckets=4, wave_buckets=2, conv_dedup=True, bpe_train=8)
+    assert (r4.buckets_processed, r4.buckets_skipped) == (4, 0)
