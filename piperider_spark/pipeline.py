@@ -264,6 +264,16 @@ def _stage_mode(path: str | None, fit: str | None, suffix: str = "") -> str:
     return f"{fit}{suffix}" if fit else "none"
 
 
+def _has_parquet(path: str) -> bool:
+    """True iff a parquet data file (one Spark would read: not hidden, not
+    `_`-prefixed) exists under ``path``."""
+    return any(
+        f.endswith(".parquet") and not f.startswith(("_", "."))
+        for _, _, files in os.walk(path)
+        for f in files
+    )
+
+
 def _fresh(path: str, meta_file: str, meta: dict) -> bool:
     """The reuse gate of every derived dir (staged/, dup_convs/, fitted
     sidecars): its write completed (``_SUCCESS``) and the JSON manifest
@@ -362,7 +372,10 @@ def run_pipeline(
     lose up to two waves: one wave's decisions write plus the previous
     wave's pending aggregates. Neither is in lineage, so a resume redoes
     both. An error in the background writer is raised from here once the
-    wave in flight on the calling thread has been written.
+    wave in flight on the calling thread has been written. A lineage/ that
+    holds parquet files but cannot be read raises a RuntimeError naming it
+    (``resume=False``, the CLI's ``--no-resume``, reprocesses every bucket
+    without reading it); one with no parquet file counts as nothing done.
 
     Outputs under ``output_dir``:
       decisions/      conv_id, turn_idx, role, ts, keep, reasons, lang, ppl,
@@ -738,7 +751,9 @@ def run_pipeline(
 
     spec_sig = _spec_sig(spec)
     done: set[int] = set()
-    if resume and os.path.isdir(lineage_path):
+    # Only a lineage/ with no parquet file means nothing is done yet; any
+    # other failure to read it is reported, not taken as "reprocess all".
+    if resume and _has_parquet(lineage_path):
         try:
             # mergeSchema: lineage written before a column existed still
             # reads (the column is null there; _lineage_col defaults it)
@@ -778,8 +793,12 @@ def run_pipeline(
             if conv_rollup:
                 ok &= F.col("s.rollup") & (F.col("s.rollup_frac") == float(conv_min_keep_frac))
             done = {r["bucket"] for r in last.where(ok).collect()}
-        except Exception:
-            done = set()
+        except Exception as e:
+            raise RuntimeError(
+                f"cannot read the lineage at {lineage_path} to decide which buckets "
+                f"are done ({e.__class__.__name__}); fix or remove it, or rerun with "
+                "--no-resume to reprocess every bucket"
+            ) from e
 
     todo = [b for b in range(n_buckets) if b not in done]
     processed = 0

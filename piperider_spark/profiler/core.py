@@ -4,22 +4,29 @@ The reference emits 4-5 SQL statements *per column* (combined aggregates,
 non-duplicates, top-k, histogram, quantiles — piperider_cli/profiler/
 profiler.py:765-1030) and fans them out over a 5-thread pool. Spark lets us
 do radically better at scale — this module profiles an entire table in TWO
-jobs (one table scan + one value-counts shuffle), regardless of column
-count:
+actions (one table scan + one value-counts shuffle; under AQE the scheduler
+splits them into about five jobs), regardless of column count:
 
-  job 1  one ``df.agg(...)`` computing every per-column scalar aggregate
-         (counts, min/max/avg/sum/stddev, flag counts, length stats) in a
-         single scan — manual aggregate fusion taken to its limit
-         (reference does this per column at profiler.py:827-852; Catalyst
-         gives partial aggregation free).
-  job 2  one exploded ``groupBy(col_idx, value)`` over all profiled columns
-         (the only other shuffle), then ONE ``mapInPandas`` pass over the
-         per-value counts computing distinct / non-duplicates / top-k /
-         exact percentile_disc quantiles / every histogram at once: all
-         distribution metrics are functions of the value counts, and per
-         column those fit in one python worker where sort/cumsum/bincount
-         are single C calls. (Reference: 3-4 more statements per column —
-         profiler.py:1620-1758, 1646-1728, 1034-1196.)
+  job 1  one aggregate ``selectExpr`` computing every per-column scalar
+         aggregate (counts, min/max/avg/sum/stddev, flag counts, length
+         stats) in a single scan — manual aggregate fusion taken to its
+         limit (reference does this per column at profiler.py:827-852;
+         Catalyst gives partial aggregation free).
+  job 2  one ``stack(...)`` generator + ``groupBy(col_idx, value)`` over
+         all profiled columns (the only other shuffle), then ONE
+         ``mapInPandas`` pass over the per-value counts computing distinct /
+         non-duplicates / top-k / exact percentile_disc quantiles / every
+         histogram at once: all distribution metrics are functions of the
+         value counts, and per column those fit in one python worker where
+         sort/cumsum/bincount are single C calls. (Reference: 3-4 more
+         statements per column — profiler.py:1620-1758, 1646-1728,
+         1034-1196.)
+
+Both passes are planned from SQL text, one JVM call per pass: building the
+same expressions as pyspark ``Column`` objects costs hundreds of py4j round
+trips per profiled column on the driver. ARRAY columns are profiled over
+their exploded items on one background thread that starts before job 1, so
+their passes overlap the table's own.
 
 At 100 TB the dominant cost is the scan; 2 scans total vs 4-5 scans/column
 is the difference between feasible and not. Metric semantics (bucket math,
@@ -35,10 +42,12 @@ from __future__ import annotations
 
 import decimal as _decimal
 import math
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import date, datetime
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -89,9 +98,15 @@ def classify_type(dt: T.DataType) -> tuple[str, bool]:
     return "other", False
 
 
+def _q(name: str) -> str:
+    """SQL identifier for a literal column name or alias: backtick-quoted,
+    inner backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _fc(name: str):
     """Column ref by literal (possibly dotted) top-level name."""
-    return F.col(f"`{name}`")
+    return F.col(_q(name))
 
 
 def flatten_schema(df: DataFrame) -> tuple[DataFrame, list[tuple[str, Any]]]:
@@ -103,27 +118,27 @@ def flatten_schema(df: DataFrame) -> tuple[DataFrame, list[tuple[str, Any]]]:
     Returns (flat_df, arrays) where arrays is [(dot_path, Column)]. MAP
     columns stay as-is (classified "other" — the reference has no map
     type). The flatten is a pure projection: no shuffle, and Catalyst
-    prunes unreferenced struct fields at the scan.
+    prunes unreferenced struct fields at the scan. A schema with no STRUCT
+    or ARRAY column is returned as is, without building any Column.
     """
+    fields = df.schema.fields
+    if not any(isinstance(f.dataType, (T.StructType, T.ArrayType)) for f in fields):
+        return df, []
     flat_cols: list = []
     arrays: list[tuple[str, Any]] = []
-    changed = False
 
     def walk(path: str, dt: T.DataType, col) -> None:
-        nonlocal changed
         if isinstance(dt, T.StructType):
-            changed = True
             for f in dt.fields:
                 walk(f"{path}.{f.name}", f.dataType, col.getField(f.name))
         elif isinstance(dt, T.ArrayType):
-            changed = True
             arrays.append((path, col))
         else:
             flat_cols.append(col.alias(path))
 
-    for f in df.schema.fields:
+    for f in fields:
         walk(f.name, f.dataType, _fc(f.name))
-    return (df.select(*flat_cols) if changed else df), arrays
+    return df.select(*flat_cols), arrays
 
 
 _ORIG_SUFFIX = "::orig"
@@ -252,46 +267,57 @@ _QUANTILES = (0.05, 0.25, 0.50, 0.75, 0.95)
 _QKEYS = ("p5", "p25", "p50", "p75", "p95")
 
 
-def _agg_exprs(col: str, generic: str, approx: bool, guard: bool = True) -> list:
-    c = _fc(col)
-    q = _fc(col)  # quantile target
-    exprs = [F.count(c).alias(f"{col}::non_nulls")]
+def _percentile_approx(c: str) -> str:
+    """percentile_approx of the identifier ``c`` at every _QUANTILES point."""
+    points = ", ".join(f"{p!r}D" for p in _QUANTILES)
+    return f"percentile_approx({c}, array({points}), 10000)"
+
+
+def _agg_exprs(col: str, generic: str, approx: bool, guard: bool = True) -> list[str]:
+    """Job 1's aggregates for one column as SQL text, each aliased
+    ``<col>::<key>``."""
+    c = _q(col)
+
+    def agg(expr: str, key: str) -> str:
+        return f"{expr} AS {_q(f'{col}::{key}')}"
+
+    exprs = [agg(f"count({c})", "non_nulls")]
     if generic == "uuid" and approx:
         # approx mode: uuid columns are typically ~unique — sketch their
         # distinct in job 1 and skip the exact value-counts shuffle
         # entirely (they join skip_vc like quantile-only numerics)
-        exprs.append(F.approx_count_distinct(c, 0.02).alias(f"{col}::approx_distinct"))
+        exprs.append(agg(f"approx_count_distinct({c}, 0.02D)", "approx_distinct"))
     if guard and not approx and generic in ("string", "integer", "numeric", "datetime", "uuid"):
         # cheap HLL cardinality estimate feeding the exact-distribution
         # guard (ProfilerConfig.exact_distribution_cap) — boolean/other
         # columns are bounded/skipped and need none
-        exprs.append(F.approx_count_distinct(c, 0.05).alias(f"{col}::acd"))
+        exprs.append(agg(f"approx_count_distinct({c}, 0.05D)", "acd"))
     if generic == "string":
-        ln = F.length(c)
+        ln = f"length({c})"
         exprs += [
-            F.count_if(ln == 0).alias(f"{col}::zero_length"),
-            F.avg(ln).alias(f"{col}::avg"),
-            F.min(ln).alias(f"{col}::min"),
-            F.max(ln).alias(f"{col}::max"),
-            F.stddev(ln).alias(f"{col}::stddev"),
+            agg(f"count_if({ln} = 0)", "zero_length"),
+            agg(f"avg({ln})", "avg"),
+            agg(f"min({ln})", "min"),
+            agg(f"max({ln})", "max"),
+            agg(f"stddev({ln})", "stddev"),
         ]
     elif generic in ("integer", "numeric"):
         exprs += [
-            F.count_if(c == 0).alias(f"{col}::zeros"),
-            F.count_if(c < 0).alias(f"{col}::negatives"),
-            F.sum(c.cast("double")).alias(f"{col}::sum"),
-            F.avg(c).alias(f"{col}::avg"),
-            F.min(c).alias(f"{col}::min"),
-            F.max(c).alias(f"{col}::max"),
-            F.stddev(c.cast("double")).alias(f"{col}::stddev"),
+            agg(f"count_if({c} = 0)", "zeros"),
+            agg(f"count_if({c} < 0)", "negatives"),
+            agg(f"sum(CAST({c} AS DOUBLE))", "sum"),
+            agg(f"avg({c})", "avg"),
+            agg(f"min({c})", "min"),
+            agg(f"max({c})", "max"),
+            agg(f"stddev(CAST({c} AS DOUBLE))", "stddev"),
         ]
         if approx:
             exprs += [
-                F.percentile_approx(q, list(_QUANTILES), 10000).alias(f"{col}::quantiles"),
+                agg(_percentile_approx(c), "quantiles"),
                 # sketch distinct so quantile-only columns can skip the exact
                 # value-counts job entirely (the 10^12-row escape hatch —
                 # reference approx branches, profiler.py:1163-1173)
-                F.approx_count_distinct(c, 0.02).alias(f"{col}::approx_distinct"),
+                agg(f"approx_count_distinct({c}, 0.02D)", "approx_distinct"),
             ]
         # exact quantiles (the reference's percentile_disc default branch,
         # profiler.py:1184-1186) are NOT aggregated here: five builtin
@@ -300,9 +326,9 @@ def _agg_exprs(col: str, generic: str, approx: bool, guard: bool = True) -> list
         # window over already-shuffled (value, count) pairs — see
         # operators/quantiles.py for the standalone variant).
     elif generic == "datetime":
-        exprs += [F.min(c).alias(f"{col}::min"), F.max(c).alias(f"{col}::max")]
+        exprs += [agg(f"min({c})", "min"), agg(f"max({c})", "max")]
     elif generic == "boolean":
-        exprs += [F.count_if(c == F.lit(True)).alias(f"{col}::trues")]
+        exprs += [agg(f"count_if({c} = true)", "trues")]
     return exprs
 
 
@@ -314,7 +340,8 @@ def _agg_exprs(col: str, generic: str, approx: bool, guard: bool = True) -> list
 def _value_counts(
     df: DataFrame, cols: list[str], numeric: set[str], topk_cols: set[str]
 ) -> DataFrame:
-    """One exploded groupBy over the values of every profiled column.
+    """One ``stack`` generator + groupBy over the values of every profiled
+    column: each input row yields one (ci, v, vn) row per column.
 
     Each value carries up to two representations: `v` (string — only for
     columns whose values are *rendered*, i.e. top-k candidates and
@@ -324,29 +351,13 @@ def _value_counts(
     derivation). Non-top-k numeric columns skip the string cast entirely:
     double→string rendering across millions of values is pure overhead for
     a column that only needs distinct/quantile math."""
-    pairs = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("ci"),
-                        (
-                            _fc(c).cast("string")
-                            if (c in topk_cols or c not in numeric)
-                            else F.lit(None).cast("string")
-                        ).alias("v"),
-                        (
-                            _fc(c).cast("double")
-                            if c in numeric
-                            else F.lit(None).cast("double")
-                        ).alias("vn"),
-                    )
-                    for i, c in enumerate(cols)
-                ]
-            )
-        ).alias("p")
-    ).select("p.ci", "p.v", "p.vn").where(
-        F.col("v").isNotNull() | F.col("vn").isNotNull()
+    rows = []
+    for i, c in enumerate(cols):
+        v = _q(c) if (c in topk_cols or c not in numeric) else "NULL"
+        vn = _q(c) if c in numeric else "NULL"
+        rows.append(f"{i}, CAST({v} AS STRING), CAST({vn} AS DOUBLE)")
+    pairs = df.selectExpr(f"stack({len(cols)}, {', '.join(rows)}) AS (ci, v, vn)").where(
+        "v IS NOT NULL OR vn IS NOT NULL"
     )
     return pairs.groupBy("ci", "v", "vn").agg(F.count(F.lit(1)).alias("cnt"))
 
@@ -605,11 +616,52 @@ def _iso(v) -> str | None:
     return v.isoformat()
 
 
+def _profile_arrays(
+    src_df: DataFrame, array_cols: list[tuple[str, Any]], cfg: ProfilerConfig, table_name: str
+) -> dict[str, dict]:
+    """Profile each ARRAY column as its item type over its exploded rows,
+    one after another (one pruned-scan job pair per array column — the scan
+    reads only that column). `total`/`samples` for these columns are the
+    ITEM counts, exactly the reference's per-column UNNEST-CTE semantics;
+    arrays-of-struct recurse into `path.field` leaves."""
+    # limit=0: src_df is already row-limited, and item metrics must cover
+    # ALL items of the sampled rows — re-applying the limit to exploded item
+    # rows would under-sample arrays. The caller's cardinality-guard settings
+    # propagate: the sub-profile must honor an explicit exact_distribution_cap
+    # (review finding: it silently reverted to the default, so a
+    # high-cardinality array column ran the exact pass the caller had routed
+    # to the sketch). declared_types stays out: typed array items never go
+    # through untyped staging.
+    sub = Profiler(
+        ProfilerConfig(
+            limit=0,
+            duplicate_rows=False,
+            approx=cfg.approx,
+            exact_distribution_cap=cfg.exact_distribution_cap,
+        )
+    )
+    columns: dict[str, dict] = {}
+    for path, arr_col in array_cols:
+        exploded = src_df.select(F.explode(arr_col).alias(path))
+        prof = sub._profile(exploded, f"{table_name}.{path}", background=False)
+        for cname, cprof in prof["columns"].items():
+            if cname == path:  # array of scalars: ARRAY<item> label
+                cprof["schema_type"] = f"ARRAY<{cprof['schema_type']}>"
+            columns[cname] = cprof
+    return columns
+
+
 class Profiler:
     def __init__(self, config: ProfilerConfig | None = None):
         self.config = config or ProfilerConfig()
 
     def profile_table(self, df: DataFrame, table_name: str) -> dict[str, Any]:
+        return self._profile(df, table_name, background=True)
+
+    def _profile(self, df: DataFrame, table_name: str, background: bool) -> dict[str, Any]:
+        """profile_table's body. With ``background`` the ARRAY columns are
+        profiled on a background thread; the array sub-profiles pass False,
+        so at most one background action is in flight per call."""
         cfg = self.config
         if cfg.limit and cfg.limit > 0:
             row_count = df.count()
@@ -628,6 +680,49 @@ class Profiler:
         # profiler.py:358-418, 571-573). The explode source keeps the limit.
         src_df = df
         df, array_cols = flatten_schema(df)
+
+        # The array pass reads only its own columns and needs nothing from
+        # jobs 1-2, so it starts first, on one thread, and overlaps them.
+        # The target is wrapped in the caller's thread so its jobs keep the
+        # caller's job group; leaving the `with` joins the thread on every
+        # exit, and a failure in it raises here through result().
+        with ThreadPoolExecutor(max_workers=1, thread_name_prefix="profile-arrays") as pool:
+            arrays = None
+            if array_cols and background:
+                arrays = pool.submit(
+                    inheritable_thread_target(df.sparkSession)(_profile_arrays),
+                    src_df, array_cols, cfg, table_name,
+                )
+            df, total, columns = self._profile_columns(df, row_count, samples_p)
+            columns.update(
+                arrays.result()
+                if arrays is not None
+                else _profile_arrays(src_df, array_cols, cfg, table_name)
+            )
+        if row_count is None:
+            row_count = samples = total
+
+        result: dict[str, Any] = {
+            "name": table_name,
+            "row_count": row_count,
+            "samples": samples,
+            "samples_p": samples_p,
+            "col_count": len(columns),
+            "columns": columns,
+        }
+
+        if cfg.duplicate_rows:
+            # over the flattened (struct-leaf) projection; array columns are
+            # excluded from the row-identity key
+            result.update(self._duplicate_rows(df, samples))
+        return result
+
+    def _profile_columns(
+        self, df: DataFrame, row_count: int | None, samples_p: float
+    ) -> tuple[DataFrame, int, dict[str, dict]]:
+        """Jobs 1 and 2 over the flattened, non-array columns. Returns the
+        projected frame, the profiled row count and the column profiles."""
+        cfg = self.config
 
         # ---- untyped-ingest staging: validity transform per declared type
         string_cols = {
@@ -678,7 +773,7 @@ class Profiler:
             df = df.repartition(target)
 
         # ---- job 1: one fused aggregation over every column --------------
-        agg_exprs = [F.count(F.lit(1)).alias("::total")]
+        agg_exprs = ["count(1) AS `::total`"]
         for name, generic, _is_int in fields:
             agg_exprs += _agg_exprs(
                 name, generic, cfg.approx, guard=cfg.exact_distribution_cap > 0
@@ -687,13 +782,12 @@ class Profiler:
             # non_nulls comes from the RAW staging column; count(valid c)
             # below is `valids` (the reference's algebra, profiler.py:748-750)
             agg_exprs.append(
-                F.count(_fc(name + _ORIG_SUFFIX)).alias(f"{name}::orig_non_nulls")
+                f"count({_q(name + _ORIG_SUFFIX)}) AS {_q(name + '::orig_non_nulls')}"
             )
-        row = df.agg(*agg_exprs).collect()[0].asDict()
+        row = df.selectExpr(*agg_exprs).collect()[0].asDict()
         total = row["::total"]
         if row_count is None:
             row_count = total
-            samples = total
 
         def rv(col, key):
             return json_safe(row.get(f"{col}::{key}"))
@@ -740,11 +834,9 @@ class Profiler:
         # only when the guard fires; never at fixture scale)
         overcap_numeric = [n for n in overcap if n in numeric_cols]
         if overcap_numeric:
-            qrow = df.agg(
+            qrow = df.selectExpr(
                 *[
-                    F.percentile_approx(_fc(n), list(_QUANTILES), 10000).alias(
-                        f"{n}::quantiles"
-                    )
+                    f"{_percentile_approx(_q(n))} AS {_q(n + '::quantiles')}"
                     for n in overcap_numeric
                 ]
             ).collect()[0]
@@ -980,50 +1072,7 @@ class Profiler:
                 )
             columns[name] = col
 
-        # ---- recursive pass over ARRAY columns ---------------------------
-        # Each array column is profiled as its item type over its exploded
-        # rows (one pruned-scan job pair per array column — the scan reads
-        # only that column). `total`/`samples` for these columns are the
-        # ITEM counts, exactly the reference's per-column UNNEST-CTE
-        # semantics; arrays-of-struct recurse into `path.field` leaves.
-        for path, arr_col in array_cols:
-            exploded = src_df.select(F.explode(arr_col).alias(path))
-            # limit=0: src_df is already row-limited, and item metrics must
-            # cover ALL items of the sampled rows — re-applying the limit to
-            # exploded item rows would under-sample arrays
-            sub = Profiler(
-                # propagate the caller's cardinality-guard settings: the
-                # sub-profile must honor an explicit exact_distribution_cap
-                # (review finding: it silently reverted to the default, so
-                # a high-cardinality array column ran the exact pass the
-                # caller had routed to the sketch). declared_types stays
-                # out: typed array items never go through untyped staging.
-                ProfilerConfig(
-                    limit=0,
-                    duplicate_rows=False,
-                    approx=cfg.approx,
-                    exact_distribution_cap=cfg.exact_distribution_cap,
-                )
-            ).profile_table(exploded, f"{table_name}.{path}")
-            for cname, cprof in sub["columns"].items():
-                if cname == path:  # array of scalars: ARRAY<item> label
-                    cprof["schema_type"] = f"ARRAY<{cprof['schema_type']}>"
-                columns[cname] = cprof
-
-        result: dict[str, Any] = {
-            "name": table_name,
-            "row_count": row_count,
-            "samples": samples,
-            "samples_p": samples_p,
-            "col_count": len(columns),
-            "columns": columns,
-        }
-
-        if cfg.duplicate_rows:
-            # over the flattened (struct-leaf) projection; array columns are
-            # excluded from the row-identity key
-            result.update(self._duplicate_rows(df, samples))
-        return result
+        return df, total, columns
 
     def _duplicate_rows(self, df: DataFrame, samples: int) -> dict:
         """Table-level duplicate_rows: GROUP BY all columns HAVING count>1 →

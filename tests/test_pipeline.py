@@ -1490,3 +1490,24 @@ def test_legacy_lineage_resumes_under_default_modes(spark, tmp_path):
     rewrite_legacy()
     r4 = run_pipeline(spark, inp, out, n_buckets=4, wave_buckets=2, conv_dedup=True, bpe_train=8)
     assert (r4.buckets_processed, r4.buckets_skipped) == (4, 0)
+
+
+def test_resume_reads_lineage_or_says_why_not(spark, transcripts_pdf, tmp_path):
+    """A lineage/ with no parquet file means nothing is done; one whose
+    parquet cannot be read stops the run with an error naming it and
+    pointing at --no-resume, instead of silently reprocessing."""
+    import os
+
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(transcripts_pdf.head(600), inp)
+    out = str(tmp_path / "out")
+    lineage = os.path.join(out, "lineage")
+    os.makedirs(lineage)
+    r = run_pipeline(spark, inp, out, n_buckets=2)
+    assert r.buckets_processed == 2 and r.buckets_skipped == 0
+
+    with open(os.path.join(lineage, "part-00000-garbage.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(RuntimeError, match="--no-resume") as err:
+        run_pipeline(spark, inp, out, n_buckets=2)
+    assert lineage in str(err.value)

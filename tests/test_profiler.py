@@ -756,3 +756,99 @@ def test_bare_table_name_with_extension_uses_its_format(spark, tmp_path):
     df = ds.read_table(spark, "events.csv")
     assert df.columns == ["a", "b"]
     assert df.count() == 3
+
+
+# ---- identifier quoting, driver cost, background array pass ----------------
+
+def test_profile_quotes_backtick_and_dotted_names(spark):
+    """Column names are quoted as identifiers everywhere: a backtick inside
+    a name is doubled, a dot is part of the name, and struct leaves named
+    either way profile like any other column."""
+    schema = T.StructType([
+        T.StructField("x`y", T.StringType()),
+        T.StructField("p.q", T.LongType()),
+        T.StructField("s", T.StructType([
+            T.StructField("a", T.LongType()),
+            T.StructField("k`z", T.StringType()),
+        ])),
+    ])
+    rows = [("a", 1, (1, "u")), ("a", 2, (2, "v")), ("b", None, (2, None)), (None, 3, None)]
+    cols = profile_table(spark.createDataFrame(rows, schema), "t")["columns"]
+    expect = {"x`y": (3, 2), "p.q": (3, 3), "s.a": (3, 2), "s.k`z": (2, 2)}
+    assert {n: (cols[n]["non_nulls"], cols[n]["distinct"]) for n in expect} == expect
+
+
+def _py4j_commands(spark, monkeypatch, n_cols: int) -> int:
+    from py4j.clientserver import ClientServerConnection
+
+    df = spark.range(0, 200, 1, 1).selectExpr(*[f"id % {i + 2} AS c{i}" for i in range(n_cols)])
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        profile_table(df, "t")
+    return calls[0]
+
+
+def test_profile_driver_commands_per_column(spark, monkeypatch):
+    """Both passes are planned from SQL text: each extra profiled column
+    costs a few py4j commands on the driver, not one per Column call."""
+    narrow = _py4j_commands(spark, monkeypatch, 10)
+    wide = _py4j_commands(spark, monkeypatch, 40)
+    assert (wide - narrow) / 30 <= 50, (narrow, wide)
+
+
+def test_array_pass_keeps_callers_job_group_and_joins(spark):
+    """The background array pass runs every job under the caller's job
+    group, and no thread outlives the call."""
+    import threading
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def marker(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([1]).count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(st.getJobIdsForGroup(group))
+
+    df = spark.createDataFrame(
+        [(i, [f"t{i % 3}", "x"]) for i in range(200)], "id int, tags array<string>"
+    )
+    threads = threading.active_count()
+    first = marker("before-array-profile")
+    sc.setJobGroup("array-profile", "array profile job group")
+    try:
+        r = profile_table(df, "t")
+    finally:
+        last = marker("after-array-profile")
+        sc.setJobGroup("", "")
+    assert threading.active_count() == threads
+    started = set(range(first + 1, last))
+    assert started and set(st.getJobIdsForGroup("array-profile")) == started
+    tags = r["columns"]["tags"]
+    assert tags["total"] == 400 and tags["distinct"] == 4
+    assert list(r["columns"]) == ["id", "tags"]
+
+
+def test_array_pass_failure_surfaces_and_joins(spark, monkeypatch):
+    """An error in the background array pass raises from profile_table, and
+    its thread is gone when it does."""
+    import threading
+
+    from piperider_spark.profiler import core
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("injected array profile failure")
+
+    monkeypatch.setattr(core, "_profile_arrays", failing)
+    df = spark.createDataFrame([(1, ["a"]), (2, None)], "id int, tags array<string>")
+    threads = threading.active_count()
+    with pytest.raises(RuntimeError, match="injected array profile failure"):
+        profile_table(df, "t")
+    assert threading.active_count() == threads
