@@ -178,6 +178,21 @@ def rolling_hash_fingerprint(text: Column | str, k: int = 16) -> Column:
     return F.when(n >= k, min_hash)
 
 
+def token_windows(toks: Column, k: int) -> Column:
+    """Space-joined k-token windows of a token array holding at least k
+    tokens (callers guard shorter arrays), in order.
+
+    Built from k shifted slices folded with ``zip_with``, so every lambda
+    sees only its own elements: a ``transform`` over window indexes whose
+    lambda slices ``toks`` re-evaluates an inline tokenizer once per
+    window, O(n^2) regex splits per document."""
+    m = F.size(toks) - F.lit(k - 1)
+    out = F.slice(toks, 1, m)
+    for j in range(2, k + 1):
+        out = F.zip_with(out, F.slice(toks, j, m), lambda a, b: F.concat_ws(" ", a, b))
+    return out
+
+
 def word_shingles(text: Column | str, k: int = 3) -> Column:
     """Distinct k-token shingles (space-joined) of the lowercased text.
 
@@ -186,10 +201,7 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
     """
     toks = tokens(F.lower(_c(text)))
     n = F.size(toks)
-    shingled = F.transform(
-        F.sequence(F.lit(1), n - F.lit(k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )
+    shingled = token_windows(toks, k)
     whole = F.array(F.concat_ws(" ", toks))
     return F.when(n == 0, F.array().cast("array<string>")).otherwise(
         F.when(n < k, whole).otherwise(F.array_distinct(shingled))

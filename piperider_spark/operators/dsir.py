@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from piperider_spark.functions.text import md5_60bit, tokens
+from piperider_spark.functions.text import md5_60bit, token_windows, tokens
 from piperider_spark.operators.similarity import arr_lit
 
 # (h + 1) / _U_DENOM maps the 60-bit md5 hash onto a uniform in (0, 1).
@@ -55,14 +55,9 @@ def ngram_buckets(
     conv() string math per gram, ~4× faster featurize (the same twin
     pattern as dedup.minhash_signatures)."""
     toks = tokens(F.lower(text if isinstance(text, Column) else F.col(text)))
-    n = F.size(toks)
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = F.when(F.size(toks) >= 2, token_windows(toks, 2)).otherwise(
+        F.array().cast("array<string>")
+    )
     grams = F.concat(toks, bigrams)
     if hash_fn == "xxhash64":
         return F.transform(grams, lambda g: F.pmod(F.xxhash64(g), F.lit(n_buckets)))

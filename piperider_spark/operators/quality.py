@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from piperider_spark.functions.text import en_stopword_hits, tokens
+from piperider_spark.functions.text import en_stopword_hits, token_windows, tokens
 
 # Drop thresholds from Rae et al. 2021, Table A1.
 DUP_LINE_FRAC_MAX = 0.30
@@ -55,15 +55,9 @@ def _empty() -> Column:
 def word_ngrams(toks: Column, n: int) -> Column:
     """Space-joined word n-grams; fewer than n tokens → empty array.
 
-    The ``when`` guard matters: ``sequence(1, 0)`` is a *descending*
-    sequence in Spark, not empty."""
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(_empty())
+    The ``when`` guard matters: :func:`token_windows` needs at least n
+    tokens (a shorter array makes a negative slice length)."""
+    return F.when(F.size(toks) >= n, token_windows(toks, n)).otherwise(_empty())
 
 
 def _kinded(kind: str, arr: Column) -> Column:
